@@ -38,14 +38,29 @@ private[graft] object Par {
   /** Run `fs` concurrently on [[overlapEc]] and return their results in
     * order; the calling thread blocks until EVERY branch settles (even
     * when one fails — an escaped in-flight branch could race whatever
-    * recovery the caller runs next), then the first failure rethrows —
-    * the same fail-loud contract as running them sequentially.
+    * recovery the caller runs next), then [[throwFailures]] rethrows —
+    * the same fail-loud contract as running them sequentially, with no
+    * later failure masked.
     */
   def joinAll[A](fs: Seq[() => A]): Seq[A] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     val futs = fs.map(f => Future(f())(overlapEc))
-    futs.map(f => scala.util.Try(Await.result(f, Duration.Inf))).map(_.get)
+    val settled = futs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+    throwFailures(settled: _*)
+    settled.map(_.get)
+  }
+
+  /** Given branches that have ALL settled, rethrow the first failure in
+    * argument order with every later one attached via `addSuppressed`;
+    * return normally when none failed.
+    */
+  def throwFailures(settled: scala.util.Try[_]*): Unit = {
+    val failures = settled.collect { case scala.util.Failure(e) => e }.distinct
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
   }
 
   def spread(df: DataFrame): DataFrame = {

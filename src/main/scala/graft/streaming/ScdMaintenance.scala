@@ -295,6 +295,7 @@ final class ScdMaintainer private (
     }
     val closedTry = scala.util.Try(scala.concurrent.Await.result(
       closedFut, scala.concurrent.duration.Duration.Inf))
+    graft.operators.Par.throwFailures(kvTry, closedTry)
     var kv = kvTry.get
     val closedStats = closedTry.get
     // 3. bounded read amplification: MoR folds accumulate deletion

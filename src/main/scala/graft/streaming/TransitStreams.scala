@@ -205,8 +205,7 @@ object TransitStreams {
       }
   }
 
-  /** O4 — micro-poll loop analog: wire any of the above to a sink with a
-    * processing-time trigger (consumers/consumer.py:70-99's 1 s cadence).
-    */
-  val DefaultTriggerMs = 1000L
+  // O4 — micro-poll loop analog (consumers/consumer.py:70-99 polls every
+  // 1 s): the processing-time trigger that wires the above to sinks is
+  // `TransitPipeline.Config.triggerMs`.
 }

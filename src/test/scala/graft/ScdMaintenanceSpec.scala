@@ -6,6 +6,32 @@ import graft.operators.Cdc
 import graft.sources.LakeTable
 import graft.streaming.ScdMaintainer
 
+/** A local filesystem under the `faulty:` scheme that, while armed, fails
+  * every directory or file creation inside a LakeTable commit's staging
+  * directory — the first write of every commit.
+  */
+class FaultyStagingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+  override def getUri: java.net.URI = java.net.URI.create("faulty:///")
+  override def getScheme: String = "faulty"
+  private def check(p: Path): Unit =
+    if (FaultyStagingFileSystem.armed && p.toString.contains("/.stage-"))
+      throw new java.io.IOException(s"injected staging failure at $p")
+  override def mkdirs(p: Path): Boolean = { check(p); super.mkdirs(p) }
+  override def mkdirs(p: Path, permission: FsPermission): Boolean = { check(p); super.mkdirs(p, permission) }
+  override def create(
+      p: Path, overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(p)
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FaultyStagingFileSystem {
+  @volatile var armed = false
+}
+
 class ScdMaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -123,6 +149,27 @@ class ScdMaintenanceSpec extends SparkSpec {
         next.unionByName(after))),
       "an unreplayed crashed batch must vanish atomically — no orphan " +
         "closed intervals, no overlap with still-open current rows")
+  }
+
+  test("a fold whose two commits both fail reports both, then replays cleanly") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.faulty.impl", classOf[FaultyStagingFileSystem].getName)
+    val mid = log.agg((org.apache.spark.sql.functions.min(col("seq")) +
+      org.apache.spark.sql.functions.max(col("seq"))) / 2).first().getDouble(0)
+    val m = ScdMaintainer.build(log.filter(col("seq") <= mid), s"faulty://${tmp("bothfail")}")
+    val slice = log.filter(col("seq") > mid)
+    FaultyStagingFileSystem.armed = true
+    val e = try intercept[Exception](m.fold(slice, Some(1L)))
+      finally FaultyStagingFileSystem.armed = false
+    def mentions(t: Throwable, table: String): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .exists(x => Option(x.getMessage).exists(_.contains(s"/$table/t/.stage-")))
+    assert(mentions(e, "current"), "the current-slice commit's failure surfaces")
+    assert(e.getSuppressed.exists(mentions(_, "closed")),
+      "the closed append's failure is attached, not dropped")
+    assert(m.foldedBatches.isEmpty)
+    assert(m.fold(slice, Some(1L)))
+    assert(rows(m.history) == rows(Cdc.scdHistory(log)))
   }
 
   test("empty start: a fresh dimension builds from an empty log and folds from nothing") {
