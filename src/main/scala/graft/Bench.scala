@@ -209,9 +209,12 @@ object Bench {
     }
     // ...and re-emit the per-query CLEAN map as its own line directly above
     // the final summary (values rounded to ms — ~4.5 KB for 214 queries),
-    // so a tail window big enough for the map + summary preserves both
+    // so a tail window big enough for the map + summary preserves both; a
+    // failed query is null, so summing the map fails loud instead of
+    // absorbing a sentinel
     val qsRounded = results.map { case (k, _, ok, _, _) =>
-      s"\"" + k + "\":" + (if (ok) math.round(cleanVal(k) * 1000) / 1000.0 else -1)
+      s"\"" + k + "\":" +
+        (if (ok) (math.round(cleanVal(k) * 1000) / 1000.0).toString else "null")
     }.mkString("{", ",", "}")
     println(s"""{"queries_clean":$qsRounded}""")
     // tail-window-safe summary: harvesters that keep only the last N chars of

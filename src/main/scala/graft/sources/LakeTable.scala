@@ -144,27 +144,42 @@ object LakeTable {
     * DELTA (`C\tdelta` header — O(changed-files) lines) resolves by
     * applying its change lines onto the previous version's state, walking
     * back at most [[CheckpointInterval]] manifests to the nearest FULL
-    * checkpoint; legacy and checkpoint manifests resolve in one read.
+    * checkpoint; a checkpoint manifest resolves in one read.
     */
   def commitAt(spark: SparkSession, path: String, version: Int): Commit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lines = {
-      val in =
-        try fs.open(commitFile(path, version))
-        catch {
-          case e: java.io.FileNotFoundException =>
-            // same loud retention contract as a vacuumed data file
-            throw new IllegalArgumentException(
-              s"LakeTable: version $version's manifest is absent at $path — " +
-                "pruned by vacuumManifests (outside the log retention " +
-                "window) or never committed", e)
-        }
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-      finally in.close()
-    }
+    val lines = manifestLines(fs, path, version)
     if (lines.headOption.exists(_.startsWith("C\tdelta")))
       applyDelta(commitAt(spark, path, version - 1), lines, version)
     else parseFull(lines, version)
+  }
+
+  /** One manifest's lines. Replay markers are arm-qualified
+    * (`A\tarm#batchId`); a bare id is refused, naming the file — it
+    * carries no arm, and dropping it would re-apply its batch.
+    */
+  private def manifestLines(
+      fs: org.apache.hadoop.fs.FileSystem, path: String, version: Int): Vector[String] = {
+    val file = commitFile(path, version)
+    val in =
+      try fs.open(file)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          // same loud retention contract as a vacuumed data file
+          throw new IllegalArgumentException(
+            s"LakeTable: version $version's manifest is absent at $path — " +
+              "pruned by vacuumManifests (outside the log retention " +
+              "window) or never committed", e)
+      }
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
+      finally in.close()
+    lines.find(l => l.startsWith("A") && !l.contains('#')).foreach { l =>
+      throw new IllegalStateException(
+        s"LakeTable: manifest $file carries a bare replay marker " +
+          s"'${l.replace('\t', ' ')}' — markers are arm#batchId; a bare id " +
+          "names no arm and is not read")
+    }
+    lines
   }
 
   private def parseFull(lines: Vector[String], version: Int): Commit = {
@@ -237,43 +252,33 @@ object LakeTable {
 
   /** The latest committed version NUMBER. Resolution is O(1) in the
     * table's commit count, NOT a directory listing: every commit
-    * best-effort-updates a `_commits/_latest.txt` pointer (Delta's
-    * `_last_checkpoint` design), and the reader verifies the pointed
+    * best-effort-updates a `_commits/_latest/` hint (Delta's
+    * `_last_checkpoint` design), and the reader verifies the hinted
     * version exists then probes FORWARD one `exists` at a time — a
-    * pointer gone stale in the write→pointer crash window (or under a
-    * racing writer) costs O(lag) probes, never a wrong answer, because
-    * the pointer is only ever written AFTER its version's rename and so
-    * can only lag, never lead. A missing or unparsable pointer (legacy
-    * table, torn write) falls back to the full listing — which, at
-    * per-micro-batch commit frequency on a never-pruned `_commits`
-    * directory, is exactly the O(total-versions-ever) namenode load per
-    * operation the pointer exists to avoid.
+    * hint gone stale in the write→hint crash window (or under a racing
+    * writer) costs O(lag) probes, never a wrong answer, because the hint
+    * is only ever written AFTER its version's rename and so can only
+    * lag, never lead. A missing hint (a crash before the first hint
+    * landed, or a hint dir deleted out-of-band) falls back to the full
+    * listing — which, at per-micro-batch commit frequency on a
+    * never-pruned `_commits` directory, is exactly the
+    * O(total-versions-ever) namenode load per operation the hint exists
+    * to avoid.
     */
   def latestVersion(spark: SparkSession, path: String): Int = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hinted =
       try {
-        // the pointer VALUE lives in the hint file's NAME, under a swept
+        // the hint VALUE lives in the hint file's NAME, under a swept
         // O(1) subdir: a new hint lands before older ones sweep, so a
-        // reader in the swap window always sees at least one (the old
-        // single-file delete+rename protocol had a no-pointer window
-        // that cost every concurrent reader the full listing fallback)
+        // reader in the swap window always sees at least one
         val hd = new Path(s"$path/_commits/_latest")
-        val named =
-          if (!fs.exists(hd)) None
-          else fs.listStatus(hd).toSeq.map(_.getPath.getName).collect {
-            case n if n.startsWith("v") && n.endsWith(".txt") &&
-                n.stripPrefix("v").stripSuffix(".txt").forall(_.isDigit) =>
-              n.stripPrefix("v").stripSuffix(".txt").toInt
-          }.maxOption
-        val v0 = named.getOrElse {
-          // legacy single-file pointer (pre-subdir tables)
-          val in = fs.open(new Path(s"$path/_commits/_latest.txt"))
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-            finally in.close()
-          s.toInt
-        }
-        if (v0 >= 1 && fs.exists(commitFile(path, v0))) Some(v0) else None
+        if (!fs.exists(hd)) None
+        else fs.listStatus(hd).toSeq.map(_.getPath.getName).collect {
+          case n if n.startsWith("v") && n.endsWith(".txt") &&
+              n.stripPrefix("v").stripSuffix(".txt").forall(_.isDigit) =>
+            n.stripPrefix("v").stripSuffix(".txt").toInt
+        }.maxOption.filter(v0 => v0 >= 1 && fs.exists(commitFile(path, v0)))
       } catch { case scala.util.control.NonFatal(_) => None }
     hinted match {
       case Some(v0) =>
@@ -287,17 +292,16 @@ object LakeTable {
   private def commitFile(path: String, version: Int): Path =
     new Path(f"$path%s/_commits/v$version%09d.txt")
 
-  /** Best-effort pointer refresh after a commit rename: land
+  /** Best-effort hint refresh after a commit rename: land
     * `_commits/_latest/v%09d.txt` (the value is the NAME — torn content
-    * is irrelevant), then sweep older hints and any legacy single-file
-    * pointer. Land-then-sweep means a concurrent reader always sees at
-    * least the newest hint — there is no pointerless window (the old
-    * single-file delete+rename protocol had one, costing every reader
-    * caught in it the full listing fallback). Failure modes are all
-    * benign: a crash leaves the pointer stale-BEHIND (probe-forward
-    * heals it on the next read, and the next commit rewrites it). It is
-    * never ahead: it is only written after the version it names
-    * committed, and the reader verifies existence before trusting it.
+    * is irrelevant), then sweep older hints. Land-then-sweep means a
+    * concurrent reader always sees at least the newest hint — there is
+    * no hintless window that would cost every reader caught in it the
+    * full listing fallback. Failure modes are all benign: a crash leaves
+    * the hint stale-BEHIND (probe-forward heals it on the next read, and
+    * the next commit rewrites it). It is never ahead: it is only written
+    * after the version it names committed, and the reader verifies
+    * existence before trusting it.
     */
   private def writeLatestHint(
       fs: org.apache.hadoop.fs.FileSystem, path: String, version: Int): Unit =
@@ -313,8 +317,6 @@ object LakeTable {
             n.stripPrefix("v").stripSuffix(".txt").toInt < version
         }
         .foreach(fs.delete(_, false))
-      fs.delete(new Path(s"$path/_commits/_latest.txt"), false) // legacy
-      ()
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Every manifest, ascending — the table's audit trail. Resolved in
@@ -328,11 +330,7 @@ object LakeTable {
     val out = Seq.newBuilder[Commit]
     var prev: Commit = null
     versions(spark, path).foreach { v =>
-      val lines = {
-        val in = fs.open(new Path(f"$path%s/_commits/v$v%09d.txt"))
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-        finally in.close()
-      }
+      val lines = manifestLines(fs, path, v)
       prev =
         if (lines.headOption.exists(_.startsWith("C\tdelta"))) {
           require(prev != null && prev.version == v - 1,
@@ -528,7 +526,7 @@ object LakeTable {
     // appendOnly, NOT an empty touch-key probe: the probe conservatively
     // marks box-less files touched (they cannot be pruned), and append's
     // rewrite ignores its base — a keyed probe here would silently DROP
-    // a legacy unboxed file's rows from the manifest
+    // an unboxed file's rows from the manifest
     mutate(spark, path, cols, keyCol = cols.head, nFilesNew, bits,
       touchKeys = df.select(col(cols.head).as("key")).limit(0),
       rewrite = _ => df,
@@ -591,26 +589,30 @@ object LakeTable {
     * under the half-target selection bound — the cheap trigger a
     * maintenance loop polls. Sizes come from the manifest's own `Z`
     * lines (recorded at every commit from O(fresh) stats), so the poll
-    * is pure driver arithmetic — no per-file RPC; only legacy pre-Z
-    * manifests fall back to stat-ing.
+    * is pure driver arithmetic — no per-file RPC.
     */
   def shouldCompact(
       spark: SparkSession, path: String, targetFileBytes: Long): Boolean = {
     val c = latest(spark, path)
-    lazy val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    c.files.count(f =>
-      c.sizes.getOrElse(f,
-        fs.getFileStatus(new Path(abs(path, f))).getLen) < targetFileBytes / 2) >= 2
+    c.files.count(f => statOf(path, c, "Z", c.sizes, f) < targetFileBytes / 2) >= 2
   }
+
+  /** A live file's `R` row count or `Z` byte size. Every commit records
+    * both for every file it adds, so a miss is a damaged manifest —
+    * refused, naming the file, never backfilled by a footer read or stat.
+    */
+  private def statOf(
+      path: String, c: Commit, tag: String, stats: Map[String, Long],
+      f: String): Long =
+    stats.getOrElse(f, throw new IllegalStateException(
+      s"LakeTable: manifest v${c.version} at $path records no $tag line " +
+        s"for live file $f"))
 
   private def compactOnce(
       spark: SparkSession, path: String, cols: Seq[String],
       targetFileBytes: Long, bits: Int): ApplyStats = {
     val c = latest(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sized = c.files.map(f =>
-      f -> c.sizes.getOrElse(f,
-        fs.getFileStatus(new Path(abs(path, f))).getLen))
+    val sized = c.files.map(f => f -> statOf(path, c, "Z", c.sizes, f))
     val small = sized.filter(_._2 < targetFileBytes / 2).map(_._1)
     if (small.size < 2) return ApplyStats(c.version, 0, c.files.size, 0)
     val smallSet = small.toSet
@@ -1029,48 +1031,6 @@ object LakeTable {
     throw lastConflict
   }
 
-  /** Rewrite LEGACY bare replay markers (`A\t123`, written before markers
-    * were arm-qualified) to `arm#123` — under EVERY arm in `arms` — in
-    * one metadata-only commit. Run this ONCE before attaching any NEW
-    * stream to a pre-namespacing table: the bare-marker fallback in the
-    * replay check — required so a legacy table keeps its idempotence —
-    * would otherwise also swallow a NEW stream's low batchIds (every
-    * fresh checkpoint restarts at 0). After migration no bare marker
-    * exists, so the fallback never fires.
-    *
-    * `arms` must name EXACTLY the arms that ever committed bare markers
-    * to this table (a bare marker carries no arm attribution, so the
-    * mapping is operator knowledge), in both directions: OMITTING a
-    * legacy arm strips its idempotence — its crashed batch would
-    * re-apply and duplicate rows — while NAMING an arm that never wrote
-    * bare markers fabricates dedup records for it, and a fresh stream
-    * later attached under that name would silently skip its first
-    * batches (the very hazard migration exists to close). Tables that
-    * already carry only qualified markers are a no-op that burns no
-    * version.
-    */
-  def migrateLegacyMarkers(
-      spark: SparkSession, path: String,
-      arms: Seq[String] = Seq("cdc")): Commit = {
-    require(arms.nonEmpty, "LakeTable.migrateLegacyMarkers: empty arm list")
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
-      val c = latest(spark, path)
-      val (bare, qualified) = c.appliedBatches.partition(!_.contains("#"))
-      if (bare.isEmpty) return c
-      try {
-        // qualified markers fold through addMarker so each arm keeps only
-        // its max id — numeric bares collapse to one `arm#max` per arm
-        return writeCommit(spark, path, c.version + 1, c.files, c.boxes,
-          c.schemaDdl,
-          bare.flatMap(b => arms.map(a => s"$a#$b"))
-            .foldLeft(qualified)(addMarker),
-          c.deletes, c.rowCounts, prev = Some(c), sizes = c.sizes)
-      } catch { case e: CommitConflictException => lastConflict = e }
-    }
-    throw lastConflict
-  }
-
   /** Read a subset of a commit's data files with that commit's DELETION
     * VECTORS applied — the one read primitive every snapshot/changefeed/
     * maintenance path shares (and the hook an external index like
@@ -1179,20 +1139,18 @@ object LakeTable {
 
   /** `count(*)` without opening data files — the metadata-only query
     * every lake format serves from its manifest. Each commit records
-    * per-file footer row counts (`R` lines); a counted file with no
-    * deletion vector contributes its manifest number, and ONLY files
-    * that are shadowed (their count depends on the anti-join) or
-    * predate the R lines (legacy manifests) are actually read. On a
-    * maintained table the answer is pure driver arithmetic over the
+    * per-file footer row counts (`R` lines); a file with no deletion
+    * vector contributes its manifest number, and ONLY files that are
+    * shadowed (their count depends on the anti-join) are actually read.
+    * On a maintained table the answer is pure driver arithmetic over the
     * manifest — O(files) metadata, zero IO — which is what makes
     * row-count monitoring of a 100 TB table free.
     */
   def countLive(spark: SparkSession, path: String): Long = {
     val c = latest(spark, path)
     val shadowed = c.deletes.map(_._1).toSet
-    val (metadata, mustRead) =
-      c.files.partition(f => !shadowed(f) && c.rowCounts.contains(f))
-    metadata.map(c.rowCounts).sum +
+    val (mustRead, metadata) = c.files.partition(shadowed)
+    metadata.map(statOf(path, c, "R", c.rowCounts, _)).sum +
       (if (mustRead.isEmpty) 0L
        else readFilesResolved(spark, path, c, mustRead).count())
   }
@@ -1456,12 +1414,9 @@ object LakeTable {
     // into nFilesNew fixed files would land arbitrarily oversized parts
     // that no later compaction could ever split (compact only packs
     // UNDERSIZED files); sizes come from the manifest's own Z lines
-    lazy val fs = new Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
     val nOut = targetFileBytes match {
       case Some(t) if t > 0 =>
-        val bytes = shadowed.map(f => c.sizes.getOrElse(f,
-          fs.getFileStatus(new Path(abs(path, f))).getLen)).sum
+        val bytes = shadowed.map(statOf(path, c, "Z", c.sizes, _)).sum
         math.max(1, math.ceil(bytes.toDouble / t).toInt)
       case _ => nFilesNew
     }
@@ -1557,24 +1512,14 @@ object LakeTable {
     * per arm (see [[addMarker]]) — Spark's checkpointed batchIds are
     * monotone per stream, and one arm is one stream by contract, so
     * `id <= armMax` IS "already applied" (the Delta-Lake txn/appId
-    * design). Manifests written BEFORE namespacing carry bare batchIds
-    * (`A\t123`); the check also matches the marker's bare suffix exactly —
-    * without the fallback a pre-change table would lose replay idempotence
-    * across the format change and a redelivered append batch would
-    * duplicate every row. (A legacy bare id matches ANY arm, exactly the
-    * pre-namespacing behavior those tables were written under; new
-    * manifests only ever record qualified markers.) The flip side: a
-    * NEW stream attached to a legacy table restarts its batchIds at 0,
-    * and a lingering bare `0` would wrongly swallow its first batches —
-    * run [[migrateLegacyMarkers]] once before attaching new streams so
-    * no bare marker remains for the fallback to fire on.
+    * design). A manifest carrying a bare batchId is refused when read
+    * ([[manifestLines]]), so every marker compared here is qualified.
     */
   private def batchApplied(c: Commit, marker: String): Boolean = {
     if (c.appliedBatches.contains(marker)) return true
     val cut = marker.indexOf('#')
     if (cut < 0) return false
     val (arm, idStr) = (marker.substring(0, cut), marker.substring(cut + 1))
-    if (c.appliedBatches.contains(idStr)) return true // legacy bare marker
     if (idStr.isEmpty || !idStr.forall(_.isDigit)) return false
     val id = idStr.toLong
     armMaxId(c.appliedBatches, arm) match {
@@ -1621,10 +1566,7 @@ object LakeTable {
     * applied set to the number of ARMS, not the number of micro-batches
     * ever folded (a month of 1 s batches would otherwise accumulate
     * ~2.6M entries, written whole into every checkpoint manifest).
-    * Legacy manifests holding a full per-batch set self-heal: the first
-    * post-upgrade commit for an arm collapses that arm's entries to one.
-    * Non-numeric or bare entries pass through verbatim (defensive —
-    * mutations only ever construct `arm#<long>`).
+    * A bare marker (no `arm#`) is refused: no reader would accept it.
     *
     * THE CONTRACT THIS RESTS ON: one arm name = one checkpointed stream.
     * Two independent producers sharing an arm (e.g. both left on a
@@ -1637,7 +1579,7 @@ object LakeTable {
     */
   private[graft] def addMarker(applied: Set[String], marker: String): Set[String] = {
     val cut = marker.indexOf('#')
-    if (cut < 0) return applied + marker
+    require(cut >= 0, s"LakeTable: replay marker '$marker' names no arm (arm#batchId)")
     val (arm, idStr) = (marker.substring(0, cut), marker.substring(cut + 1))
     if (idStr.isEmpty || !idStr.forall(_.isDigit)) return applied + marker
     val prefix = arm + "#"
@@ -1653,7 +1595,7 @@ object LakeTable {
     * MERGE, tombstone rewrite, DV attach, merge-on-read): one broadcast
     * join of the key set against the commit's own box table; only file
     * NAMES reach the driver. A live file with no key box cannot be pruned
-    * and is always included (legacy safety).
+    * and is always included (conservative inclusion).
     *
     * Exactness above 2^53: boxes are stored as doubles, keys are often
     * 64-bit integers (md5-derived artifact keys). long→double is monotone,
@@ -1858,9 +1800,9 @@ object LakeTable {
       schemaDdl: String,
       appliedBatches: Set[String] = Set.empty,
       deletes: Seq[(String, String)] = Seq.empty,
-      rowCounts: Map[String, Long] = Map.empty,
-      prev: Option[Commit] = None,
-      sizes: Map[String, Long] = Map.empty): Commit = {
+      rowCounts: Map[String, Long],
+      sizes: Map[String, Long],
+      prev: Option[Commit] = None): Commit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new Path(s"$path/_commits"))
     val tmp = new Path(s"$path/_commits/.tmp-${java.util.UUID.randomUUID()}")
@@ -1937,7 +1879,7 @@ object LakeTable {
     sb.append("C\tdelta\n")
     if (schemaDdl != p.schemaDdl) sb.append("S\t").append(schemaDdl).append('\n')
     // marker REMOVALS come from restoreTo (discarding a crashed fold's
-    // half-applied marker), migrateLegacyMarkers, and every mutation's
+    // half-applied marker) and every mutation's
     // addMarker superseding the same arm's previous max batchId — the
     // O(arms) bound means a fold's delta is one A-/A pair, constant-size
     (p.appliedBatches -- appliedBatches).toSeq.sorted.foreach(b =>
@@ -1971,12 +1913,11 @@ object LakeTable {
     }
     // R/Z lines: one UNSORTED pass over the next maps keeps the scan
     // O(map) with no full-map sort/materialization; only the CHANGED
-    // entries (added files' stats, plus a stat newly backfilled onto a
-    // kept file — e.g. a sizes backfill on a legacy pre-Z table) sort
-    // and emit, O(change log change). A kept file's EXISTING stat can
-    // never change value (footer stats are immutable with the bytes) —
-    // that fails the commit loudly rather than publishing a delta that
-    // resolves wrong. Removals on kept files never arise from any
+    // entries (added files' stats, plus a stat newly recorded for a
+    // kept file that lacked one) sort and emit, O(change log change). A
+    // kept file's EXISTING stat can never change value (footer stats are
+    // immutable with the bytes) — that fails the commit loudly rather
+    // than publishing a delta that resolves wrong. Removals on kept files never arise from any
     // current mutation; the cheap set difference keeps the format able
     // to express them.
     def statLines(

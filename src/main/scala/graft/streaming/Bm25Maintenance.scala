@@ -20,19 +20,19 @@ import graft.operators.TextAnalysis
   * versioned snapshots `stats/v%06d/`, each containing
   *   - the stats parquet (vocab-sized — ONE coalesced file),
   *   - `_folded.txt`: the replay HIGH-WATER batchId (monotone ids make
-  *     `id <= max` the replay test, so one line suffices forever — a
-  *     legacy full-set marker reads as its max), written AFTER the
-  *     parquet lands — its presence IS the version's commit marker.
+  *     `id <= max` the replay test, so one line suffices forever;
+  *     empty before the first fold), written AFTER the parquet lands —
+  *     its presence IS the version's commit marker.
   * Readers and recovery resolve the highest version WITH a marker; a
   * crash mid-write leaves a markerless directory that is simply ignored.
   *
-  * Idempotence / at-least-once: the folded-set travels WITH the version
+  * Idempotence / at-least-once: the high-water travels WITH the version
   * it describes, which closes the replay hole a separate marker file
   * has — with "stats then marker" as two independent writes, a crash
   * between them replays the batch onto stats that already contain it
   * and every df double-counts. Here the fold for batchId B reads the
-  * current version's folded set, short-circuits if B is in it, and
-  * otherwise publishes (merged stats, set ∪ {B}) as one atomic version.
+  * current version's high-water, short-circuits if B is at or below
+  * it, and otherwise publishes (merged stats, B) as one atomic version.
   * True duplicate DOCUMENTS (same content re-arriving under a new
   * batchId) are upstream's contract: the ingest gate
   * ([[IngestGate]] / [[StreamDedup]]) dedups before anything derived
@@ -65,12 +65,10 @@ final class Bm25Maintainer private (
 
   /** The replay HIGH-WATER batchId, as a set (empty right after build;
     * a singleton after any fold — the marker keeps only the max id under
-    * the monotone-batchId contract; a legacy full-set marker reads back
-    * as its max).
+    * the monotone-batchId contract).
     */
   def foldedBatches: Set[Long] =
-    foldedOf(fs, workDir, currentVersion).maxOption
-      .map(Set(_)).getOrElse(Set.empty)
+    highWaterOf(fs, workDir, currentVersion).toSet
 
   private def currentVersion: Int = committedVersions(fs, workDir).max
 
@@ -81,12 +79,12 @@ final class Bm25Maintainer private (
   def fold(batch: DataFrame, batchId: Option[Long] = None): Boolean = synchronized {
     assertOwner()
     val v = currentVersion
-    val folded = foldedOf(fs, workDir, v)
+    val hw = highWaterOf(fs, workDir, v)
     // checkpointed batchIds are monotone, so id <= high-water IS
     // "already folded" — and the marker need only CARRY the high-water,
     // keeping marker bytes O(1) per fold where the full accumulated set
     // would be written and re-parsed per fold forever (O(batches-ever))
-    if (batchId.exists(b => folded.maxOption.exists(_ >= b))) return false
+    if (batchId.exists(b => hw.exists(_ >= b))) return false
     if (batch.isEmpty) return false
     // re-check the fence at the write boundary: the isEmpty probe above
     // is a Spark job a zombie can stall in while a takeover lands, and
@@ -102,8 +100,7 @@ final class Bm25Maintainer private (
     TextAnalysis.mergeBm25Stats(stats, batch)
       .coalesce(1)
       .write.parquet(statsPath(workDir, v + 1))
-    commitMarker(fs, workDir, v + 1,
-      (folded ++ batchId.toSet).maxOption.map(Set(_)).getOrElse(Set.empty))
+    commitMarker(fs, workDir, v + 1, (hw ++ batchId).maxOption)
     // keep the previous version for readers in flight; older ones are
     // garbage (vocab-sized dirs — cheap, but unbounded without this)
     committedVersions(fs, workDir).filter(_ < v).foreach { old =>
@@ -138,7 +135,7 @@ object Bm25Maintainer {
     TextAnalysis.bm25Stats(initialDocs)
       .coalesce(1)
       .write.parquet(statsPath(workDir, 1))
-    commitMarker(fs, workDir, 1, Set.empty)
+    commitMarker(fs, workDir, 1, None)
     new Bm25Maintainer(spark, workDir, OwnerFence.acquire(fs, s"$workDir/owner"))
   }
 
@@ -189,26 +186,36 @@ object Bm25Maintainer {
       .foreach(fs.delete(_, true))
   }
 
-  private def foldedOf(
-      fs: org.apache.hadoop.fs.FileSystem, workDir: String, v: Int): Set[Long] = {
-    val in = fs.open(markerPath(workDir, v))
+  /** The version's replay high-water: the marker's one line, or none.
+    * A marker listing several ids is refused, naming the file.
+    */
+  private def highWaterOf(
+      fs: org.apache.hadoop.fs.FileSystem, workDir: String, v: Int): Option[Long] = {
+    val file = markerPath(workDir, v)
+    val in = fs.open(file)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    text.split('\n').filter(_.nonEmpty).map(_.toLong).toSet
+    text.split('\n').filter(_.nonEmpty).toSeq match {
+      case Seq() => None
+      case Seq(id) => Some(id.toLong)
+      case ids => throw new IllegalStateException(
+        s"Bm25Maintainer: marker $file lists ${ids.size} batchIds — a " +
+          "marker carries one high-water")
+    }
   }
 
   /** Atomic: content to a tmp name, rename-without-overwrite — a crash
     * mid-write leaves dot-prefixed garbage (invisible to parquet listing
     * AND to the marker check), never a truncated `_folded.txt` whose
-    * partial content would mis-parse the folded set.
+    * partial content would mis-parse the high-water.
     */
   private def commitMarker(
       fs: org.apache.hadoop.fs.FileSystem, workDir: String, v: Int,
-      folded: Set[Long]): Unit = {
+      hw: Option[Long]): Unit = {
     val tmp = new Path(
       s"${statsPath(workDir, v)}/.tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
-    try out.write(folded.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
+    try out.write(hw.mkString.getBytes("UTF-8"))
     finally out.close()
     require(fs.rename(tmp, markerPath(workDir, v)),
       s"Bm25Maintainer: marker rename lost at ${statsPath(workDir, v)}")

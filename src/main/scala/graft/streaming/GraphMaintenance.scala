@@ -93,10 +93,10 @@ import graft.operators.SimilaritySearch
   * fold), so the common no-collision fold never scans stored ids at all.
   */
 final class GraphMaintainer private (
-    spark: SparkSession, workDir: String, k0: Int,
+    spark: SparkSession, workDir: String,
     centroids0: Broadcast[Array[(Long, Array[Double], Double)]],
     idFilter0: BloomFilter, epoch: Int,
-    state0: GraphMaintainer.GraphState, lastSeen0: Option[String]) {
+    state0: GraphMaintainer.GraphState, lastSeen0: String) {
   import GraphMaintainer._
 
   // the epoch's in-memory state: quantizer broadcast, k, the id
@@ -109,21 +109,20 @@ final class GraphMaintainer private (
   // happens-before edge; retire's own synchronized re-check is the
   // correctness backstop either way)
   @volatile private var centroidsB: Broadcast[Array[(Long, Array[Double], Double)]] = centroids0
-  @volatile private var kVar: Int = k0
-  private var legacyFoldedMaybe: Boolean = true
+  @volatile private var kVar: Int = state0.k
   private var idFilter: BloomFilter = idFilter0
-  private var lastSeen: Option[String] = lastSeen0
+  private var lastSeen: String = lastSeen0
   private var lastState: Map[(String, Long), String] = state0.entries
   private var deltasSinceCkpt: Int = state0.deltasSinceCkpt
   @volatile private var hwVar: Option[Long] = state0.hw
-  private var qVar: Option[String] = state0.quantizer
+  private var qVar: String = state0.quantizer
 
   // serve-path cache: ONE volatile ref pairing the head commit name with
   // its resolved entries, so the graph/corpus getters (hot serving loops,
   // possibly off the maintainer thread) read a tear-free snapshot without
   // the lock; only the synchronized mutators write it, alongside
   // lastSeen/lastState
-  @volatile private var serveCache: (Option[String], Map[(String, Long), String]) =
+  @volatile private var serveCache: (String, Map[(String, Long), String]) =
     (lastSeen0, state0.entries)
 
   /** Serve-path fall-throughs to a full chain resolution (foreign head —
@@ -151,17 +150,6 @@ final class GraphMaintainer private (
 
   private val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** The replay high-water this maintainer knows: the manifest-carried
-    * value once any commit has embedded one, else the legacy `folded/`
-    * marker directory of a pre-`#hw` deployment. The disk probe runs
-    * ONLY while no high-water is known at all (the pre-first-fold cold
-    * path) — once hwVar is set every call is in-memory, so an
-    * object-store deployment pays no per-micro-batch LIST for a
-    * directory that was swept long ago.
-    */
-  private def currentHw: Option[Long] =
-    if (hwVar.isDefined) hwVar else legacyFoldedHw(fs, workDir)
-
   /** Resolve the state every read and the commit base work from — ONCE
     * per mutation. If someone ELSE committed since this maintainer last
     * looked (the only legal case: a fenced zombie's late rename becoming
@@ -182,11 +170,12 @@ final class GraphMaintainer private (
     // delete (the same vacuous-pass hole OwnerFence.assertOwner refuses
     // for the owner dir)
     requireForwardListing("GraphMaintainer", workDir,
-      anchor = lastSeen, head = cur,
+      anchor = Some(lastSeen), head = cur,
       anchorVerb = "maintainer last saw", refusal = "commit over")
-    if (cur == lastSeen) lastState
+    val head = cur.get // the forward-listing check refused an empty one
+    if (head == lastSeen) lastState
     else {
-      val st = cur.map(resolveState(fs, workDir, _)).getOrElse(GraphState.empty)
+      val st = resolveState(fs, workDir, head)
       // a foreign commit can carry an epoch CUTOVER too (#q/#k — a fenced
       // zombie's late rebuildEpoch landing in the check→rename window):
       // adopting its entries/#hw/Bloom but keeping OUR quantizer would
@@ -194,10 +183,8 @@ final class GraphMaintainer private (
       // cell partitions and re-stamp the stale #q in our next commit —
       // silent corruption of the served graph, the one zombie path that
       // would neither fail loud nor lose cleanly. Adopt the foreign
-      // epoch's quantizer and k with the rest of its state. (A chain
-      // with NO #q anywhere is a legacy log; the construction-time
-      // quantizer is already the right one there.)
-      if (st.quantizer.isDefined && st.quantizer != qVar) {
+      // epoch's quantizer and k with the rest of its state.
+      if (st.quantizer != qVar) {
         val superseded = centroidsB
         centroidsB = spark.sparkContext.broadcast(
           loadQuantizer(spark, workDir, st.quantizer))
@@ -212,9 +199,9 @@ final class GraphMaintainer private (
         // from a stale-but-valid read into a crash
         superseded.unpersist()
       }
-      st.kOpt.filter(_ != kVar).foreach(kVar = _)
+      kVar = st.k
       idFilter = bloomOf(spark, workDir, st.entries)
-      lastSeen = cur
+      lastSeen = head
       lastState = st.entries
       deltasSinceCkpt = st.deltasSinceCkpt
       hwVar = (hwVar.toSeq ++ st.hw.toSeq).maxOption
@@ -267,10 +254,9 @@ final class GraphMaintainer private (
     // silently serving an empty or rolled-back index is the one thing a
     // recall service must never do
     requireForwardListing("GraphMaintainer", workDir,
-      anchor = cached._1, head = head,
+      anchor = Some(cached._1), head = head,
       anchorVerb = "maintainer last served", refusal = "serve")
-    if (head == cached._1) cached._2
-    else if (head.isEmpty) Map.empty
+    if (head.contains(cached._1)) cached._2
     else {
       serveResolves.incrementAndGet()
       resolveState(fs, workDir, head.get).entries
@@ -296,7 +282,7 @@ final class GraphMaintainer private (
     def noneTouched = spark.emptyDataset[Long].toDF("vec_id")
     // checkpointed batchIds are monotone: id <= the high-water IS
     // "already folded"
-    if (batchId.exists(id => currentHw.exists(_ >= id)))
+    if (batchId.exists(id => hwVar.exists(_ >= id)))
       return noneTouched
     val b0 = narrow(batch).localCheckpoint()
     // the ids collect below doubles as the empty probe — no separate
@@ -358,7 +344,7 @@ final class GraphMaintainer private (
         // commit): no data moves, but the batch IS applied — one empty
         // delta advances the high-water so the next redelivery
         // short-circuits without the probe
-        batchId.filterNot(id => currentHw.exists(_ >= id)).foreach { id =>
+        batchId.filterNot(id => hwVar.exists(_ >= id)).foreach { id =>
           assertOwner()
           commitSelf(Map.empty, Set.empty, base, Some(id))
         }
@@ -424,12 +410,9 @@ final class GraphMaintainer private (
     // frames) is localCheckpoint-materialized, so neither thread
     // re-derives it; applyFold's reranked graph frame itself is lazy and
     // evaluates once, on the graph-land thread alone
-    val rFut = scala.concurrent.Future(
-      landCells(fs, workDir, routingDf, RoutingArt))(GraphMaintainer.landEc)
-    val (gTok, gCells) =
-      landCells(fs, workDir, graphDf, GraphArt, preClustered = true)
-    val (rTok, rCells) = scala.concurrent.Await.result(
-      rFut, scala.concurrent.duration.Duration.Inf)
+    val ((rTok, rCells), (gTok, gCells)) = overlap(
+      landCells(fs, workDir, routingDf, RoutingArt),
+      landCells(fs, workDir, graphDf, GraphArt, preClustered = true))
     val upserts = (gCells.map(c => (GraphArt, c) -> gTok) ++
       rCells.map(c => (RoutingArt, c) -> rTok)).toMap
     val removes = touched
@@ -444,38 +427,26 @@ final class GraphMaintainer private (
     * advance every cache so resolveBase never mistakes our own commit for
     * a foreign one (which would trigger a pointless Bloom rebuild). The
     * quantizer/k lines always ride along (one line each), so the latest
-    * commit alone names the live epoch artifacts. On success the legacy
-    * `folded/` marker directory (whose high-water is now embedded) is
-    * swept — the one-directory-fewer migration the `#hw` design buys.
+    * commit alone names the live epoch artifacts.
     */
   private def commitSelf(
       upserts: Map[(String, Long), String], removes: Set[(String, Long)],
       next: Map[(String, Long), String], newHw: Option[Long],
       forceCkpt: Boolean = false,
-      q: Option[String] = qVar, kk: Int = kVar): Unit = {
-    val hw2 = (currentHw.toSeq ++ newHw.toSeq).maxOption
-    val ckpt = forceCkpt || lastSeen.isEmpty ||
-      deltasSinceCkpt + 1 >= CheckpointEvery
+      q: String = qVar, kk: Int = kVar): Unit = {
+    val hw2 = (hwVar.toSeq ++ newHw.toSeq).maxOption
+    val ckpt = forceCkpt || deltasSinceCkpt + 1 >= CheckpointEvery
     val name =
-      if (ckpt) commitManifest(fs, workDir, epoch, next,
-        hw = hw2, quantizer = q, k = Some(kk))
-      else commitManifest(fs, workDir, epoch, upserts, removes,
-        checkpoint = false, base = lastSeen,
-        hw = hw2, quantizer = q, k = Some(kk))
-    lastSeen = Some(name)
+      if (ckpt) commitManifest(fs, workDir, epoch, next, q, kk, hw = hw2)
+      else commitManifest(fs, workDir, epoch, upserts, q, kk, removes,
+        checkpoint = false, base = Some(lastSeen), hw = hw2)
+    lastSeen = name
     lastState = next
     deltasSinceCkpt = if (ckpt) 0 else deltasSinceCkpt + 1
     hwVar = hw2
     qVar = q
     kVar = kk
     serveCache = (lastSeen, lastState)
-    // one existence probe EVER, not one per commit: after the first
-    // sweep (or first confirmed absence) the flag short-circuits
-    if (legacyFoldedMaybe) {
-      val legacy = new Path(s"$workDir/folded")
-      if (fs.exists(legacy)) { fs.delete(legacy, true); () }
-      legacyFoldedMaybe = false
-    }
   }
 
   /** RETIRE stored vectors from the landed artifact —
@@ -558,9 +529,7 @@ final class GraphMaintainer private (
     * with the data in the same rename, so serving never observes a torn
     * state: a crash anywhere before the rename leaves the old epoch
     * serving in full (the landed files are vacuum-swept orphans), and a
-    * crash after it leaves the new epoch complete, quantizer included
-    * (the separate `centroids/` overwrite of the legacy layout had a
-    * mid-overwrite crash window this design deletes).
+    * crash after it leaves the new epoch complete, quantizer included.
     *
     * Forget semantics (the cascade's centroid arm): the doomed ids'
     * embeddings leave the LIVE state at the cutover; their bytes in
@@ -593,12 +562,10 @@ final class GraphMaintainer private (
     // the quantizer land (a tiny coalesce(1) write) is independent of the
     // cell-assign materialization — overlap them (§2.6); the token is not
     // needed until the commit below
-    val qTokFut = scala.concurrent.Future(
-      landQuantizer(spark, workDir, cs))(graft.operators.Par.overlapEc)
     val bcast = spark.sparkContext.broadcast(cs)
-    val cells = SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint()
-    val qTok = scala.concurrent.Await.result(
-      qTokFut, scala.concurrent.duration.Duration.Inf)
+    val (qTok, cells) = overlap(
+      landQuantizer(spark, workDir, cs),
+      SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint())
     // same one-exchange edge path + overlapped artifact writes as build
     val w = Window.partitionBy(col("cell"), col("vec_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
@@ -607,17 +574,15 @@ final class GraphMaintainer private (
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k2)
       .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"), col("cell"))
-    val rFut = scala.concurrent.Future(
-      landCells(fs, workDir, cells, RoutingArt))(GraphMaintainer.landEc)
-    val (gTok, gCells) = landCells(fs, workDir, edges, GraphArt, preClustered = true)
-    val (rTok, rCells) = scala.concurrent.Await.result(
-      rFut, scala.concurrent.duration.Duration.Inf)
+    val ((rTok, rCells), (gTok, gCells)) = overlap(
+      landCells(fs, workDir, cells, RoutingArt),
+      landCells(fs, workDir, edges, GraphArt, preClustered = true))
     val entries = (rCells.map(c => (RoutingArt, c) -> rTok) ++
       gCells.map(c => (GraphArt, c) -> gTok)).toMap
     assertOwner()
     // forced checkpoint: the new epoch shares nothing with the old state
     commitSelf(entries, Set.empty, entries, None,
-      forceCkpt = true, q = Some(qTok), kk = k2)
+      forceCkpt = true, q = qTok, kk = k2)
     val superseded = centroidsB
     centroidsB = bcast
     // per-cell audit + Bloom sizing in ONE aggregate (replaces the bare
@@ -677,7 +642,7 @@ final class GraphMaintainer private (
     val referenced: Set[String] = kept.flatMap { c =>
       c.entries.map { case ((a, cc), t) => s"data/$a/fold=$t/cell=$cc" }
     }.toSet
-    val refQ: Set[String] = kept.flatMap(_.quantizer).toSet
+    val refQ: Set[String] = kept.map(_.quantizer).toSet
     val now = System.currentTimeMillis()
     var dropped = 0
     Seq(GraphArt, RoutingArt).foreach { a =>
@@ -715,8 +680,7 @@ final class GraphMaintainer private (
       }
     }
     // superseded epochs' quantizers: rebuildEpoch strands the old token
-    // the moment no retained commit names it (the legacy `centroids/`
-    // dir is never swept — pre-`#q` logs reference it implicitly)
+    // the moment no retained commit names it
     val qRoot = new Path(s"$workDir/quantizers")
     if (fs.exists(qRoot))
       fs.listStatus(qRoot).foreach { qd =>
@@ -837,11 +801,12 @@ final class GraphReader private[streaming] (
       GraphMaintainer.requireForwardListing("GraphReader", workDir,
         anchor = served, head = head,
         anchorVerb = "reader last served", refusal = "serve")
-      val st = head.map(resolveState(fs, workDir, _)).getOrElse(GraphState.empty)
-      val snap = new GraphReader.Snapshot(head, st.hw,
-        () => readArtifact(spark, workDir, GraphArt, st.entries, None)
+      val st = head.map(resolveState(fs, workDir, _))
+      val entries = st.fold(Map.empty[(String, Long), String])(_.entries)
+      val snap = new GraphReader.Snapshot(head, st.flatMap(_.hw),
+        () => readArtifact(spark, workDir, GraphArt, entries, None)
           .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos")),
-        () => readArtifact(spark, workDir, RoutingArt, st.entries, None)
+        () => readArtifact(spark, workDir, RoutingArt, entries, None)
           .select(col("vec_id"), col("embedding")))
       val out = try f(snap) finally snap.open = false
       // advance only FORWARD: concurrent snapshots on one shared handle
@@ -910,20 +875,18 @@ object GraphMaintainer {
     */
   private[graft] val CheckpointEvery = 10
 
-  /** Daemon pool for overlapping the two independent artifact lands of a
-    * commit (guide-§2.6 back-fill: the routing write's tasks fill the
-    * executor slots the edge pipeline's tail leaves idle). One extra
-    * thread suffices — each publish runs the graph land on the calling
-    * thread and only the routing land here, so the pool can never
-    * deadlock on itself.
+  /** Run two independent branches concurrently — a commit's
+    * two artifact lands, or a quantizer land beside the cell-assign
+    * materialization (guide-§2.6 back-fill: one branch's tasks fill the
+    * executor slots the other's tail leaves idle). Both settle before any
+    * failure surfaces, through [[graft.operators.Par.joinAll]]: a land
+    * escaping in flight past the error could leave an orphan quantizer
+    * or cell directory landing after the caller moved on.
     */
-  private[streaming] lazy val landEc: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newCachedThreadPool(r => {
-        val t = new Thread(r, "graft-land-cells")
-        t.setDaemon(true)
-        t
-      }))
+  private def overlap[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(ra, rb) = graft.operators.Par.joinAll(Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
+  }
 
   /** Corpus-derived coarse-quantizer sizing for an unsized [[build]] on
     * a FRESH workDir: √n clamped to [16, 131072] — mean cell size √n
@@ -951,20 +914,17 @@ object GraphMaintainer {
   private[graft] final case class GraphCommit(
       name: String, checkpoint: Boolean, base: Option[String],
       entries: Map[(String, Long), String], removes: Set[(String, Long)],
-      hw: Option[Long], quantizer: Option[String], kOpt: Option[Int])
+      hw: Option[Long], quantizer: String, k: Int)
 
   /** A commit's RESOLVED view: the folded entry map, the newest-defined
-    * `#hw`/`#q`/`#k` along its chain, and how many deltas sit above the
-    * chain's checkpoint (the checkpoint-cadence counter a maintainer
-    * resumes from; vacuum re-walks chains itself when retaining).
+    * `#hw` along its chain, the commit's own `#q`/`#k`, and how many
+    * deltas sit above the chain's checkpoint (the checkpoint-cadence
+    * counter a maintainer resumes from; vacuum re-walks chains itself
+    * when retaining).
     */
   private[graft] final case class GraphState(
       entries: Map[(String, Long), String], hw: Option[Long],
-      quantizer: Option[String], kOpt: Option[Int], deltasSinceCkpt: Int)
-
-  private[graft] object GraphState {
-    val empty: GraphState = GraphState(Map.empty, None, None, None, 0)
-  }
+      quantizer: String, k: Int, deltasSinceCkpt: Int)
 
   private def narrow(df: DataFrame): DataFrame =
     df.select(col("vec_id"), col("embedding"))
@@ -1004,11 +964,11 @@ object GraphMaintainer {
       .filter(ManifestRe.matches(_)).sorted
   }
 
-  /** Parse one commit file. A body with no `#graft-manifest` header is a
-    * pre-delta-log manifest: a full map (checkpoint) of bare entry
-    * lines. Every malformed line fails loud NAMING the file and the
-    * line — a truncated manifest must never surface as a bare
-    * MatchError with no indication of which commit is damaged.
+  /** Parse one commit file: a `#graft-manifest v2 ckpt|delta` header
+    * line, then `#` fields (`#q` and `#k` required), entry and removal
+    * lines. A header-less body, a missing field and every malformed line
+    * fail loud NAMING the file — a truncated manifest must never surface
+    * as a bare MatchError with no indication of which commit is damaged.
     */
   private[graft] def readCommit(
       fs: FileSystem, workDir: String, name: String): GraphCommit = {
@@ -1022,17 +982,22 @@ object GraphMaintainer {
       finally in.close()
     def bad(l: String, why: String): Nothing = throw new IllegalStateException(
       s"GraphMaintainer: corrupt manifest $path — $why in line: '$l'")
-    var checkpoint = true
+    def missing(what: String): Nothing = throw new IllegalStateException(
+      s"GraphMaintainer: corrupt manifest $path — no $what line")
+    val body = lines.filter(_.nonEmpty)
+    val checkpoint = body.headOption match {
+      case Some("#graft-manifest v2 ckpt") => true
+      case Some("#graft-manifest v2 delta") => false
+      case _ => missing("#graft-manifest v2 header")
+    }
     var base: Option[String] = None
     var hw: Option[Long] = None
     var q: Option[String] = None
     var kOpt: Option[Int] = None
     val entries = Map.newBuilder[(String, Long), String]
     val removes = Set.newBuilder[(String, Long)]
-    lines.filter(_.nonEmpty).foreach {
+    body.tail.foreach {
       case l if l.startsWith("#") => l.split(' ') match {
-        case Array("#graft-manifest", "v2", "ckpt") => checkpoint = true
-        case Array("#graft-manifest", "v2", "delta") => checkpoint = false
         case Array("#base", b) =>
           // a base must sort strictly below its own commit — structural
           // cycle-freedom for the resolution walk; anything else is a
@@ -1058,7 +1023,7 @@ object GraphMaintainer {
     if (!checkpoint && base.isEmpty)
       bad("#graft-manifest v2 delta", "a delta commit names no #base")
     GraphCommit(name, checkpoint, base, entries.result(), removes.result(),
-      hw, q, kOpt)
+      hw, q.getOrElse(missing("#q")), kOpt.getOrElse(missing("#k")))
   }
 
   /** One commit's raw entry lines — a checkpoint's full map or a delta's
@@ -1073,10 +1038,10 @@ object GraphMaintainer {
     readCommit(fs, workDir, name).entries
 
   /** Resolve the full state AT a commit: walk its pinned `#base` chain
-    * back to a checkpoint, then fold the deltas forward. `#hw`/`#q`/`#k`
-    * take the newest defined value along the chain (every
-    * maintainer-written commit embeds them, so the walk is depth-0 in
-    * practice; hand-forged or legacy commits fall through).
+    * back to a checkpoint, then fold the deltas forward. `#q`/`#k` are
+    * the commit's own (every commit carries both); `#hw` takes the
+    * newest defined value along the chain (every maintainer-written
+    * commit embeds it once known, so that walk is depth-0 in practice).
     */
   private[graft] def resolveState(
       fs: FileSystem, workDir: String, name: String): GraphState = {
@@ -1093,10 +1058,10 @@ object GraphMaintainer {
     val entries = ordered.foldLeft(Map.empty[(String, Long), String]) {
       (st, c) => if (c.checkpoint) c.entries else st -- c.removes ++ c.entries
     }
-    def newestDef[A](f: GraphCommit => Option[A]): Option[A] =
-      chain.iterator.flatMap(f(_)).nextOption() // chain is newest-first
-    GraphState(entries, newestDef(_.hw), newestDef(_.quantizer),
-      newestDef(_.kOpt), ordered.size - 1)
+    val head = chain.head
+    GraphState(entries,
+      chain.iterator.flatMap(_.hw).nextOption(), // chain is newest-first
+      head.quantizer, head.k, ordered.size - 1)
   }
 
   /** The latest committed state's entry map (empty before the first
@@ -1104,12 +1069,8 @@ object GraphMaintainer {
     */
   private[graft] def latestEntries(
       fs: FileSystem, workDir: String): Map[(String, Long), String] =
-    latestState(fs, workDir).entries
-
-  /** The latest committed state, fully resolved. */
-  private[graft] def latestState(fs: FileSystem, workDir: String): GraphState =
     manifestNames(fs, workDir).lastOption
-      .map(resolveState(fs, workDir, _)).getOrElse(GraphState.empty)
+      .fold(Map.empty[(String, Long), String])(resolveState(fs, workDir, _).entries)
 
   /** Publish a commit by rename-without-overwrite — THE commit point.
     * The sequence number is monotone across epochs (max over every
@@ -1118,7 +1079,8 @@ object GraphMaintainer {
     * (same name landed twice — impossible under distinct acquired
     * epochs) fails loud rather than retrying blind. A `checkpoint`
     * carries the FULL entry map; a delta carries upserts + `removes`
-    * and must pin `base`. Field-width overflow fails loud HERE — a
+    * and must pin `base`; both name the epoch's quantizer token and k.
+    * Field-width overflow fails loud HERE — a
     * renamed commit whose name no longer matches [[ManifestRe]] would be
     * invisible to every reader, silently losing the commit until
     * resolveBase's regression check tripped much later.
@@ -1126,12 +1088,11 @@ object GraphMaintainer {
   private[graft] def commitManifest(
       fs: FileSystem, workDir: String, epoch: Int,
       entries: Map[(String, Long), String],
+      quantizer: String, k: Int,
       removes: Set[(String, Long)] = Set.empty,
       checkpoint: Boolean = true,
       base: Option[String] = None,
-      hw: Option[Long] = None,
-      quantizer: Option[String] = None,
-      k: Option[Int] = None): String = {
+      hw: Option[Long] = None): String = {
     require(epoch >= 0 && epoch <= 999999,
       s"GraphMaintainer.commitManifest: owner epoch $epoch overflows the " +
         "fixed-width name field (m%06d) — the renamed commit would match " +
@@ -1156,8 +1117,7 @@ object GraphMaintainer {
       Seq(s"#graft-manifest v2 ${if (checkpoint) "ckpt" else "delta"}") ++
         base.map(b => s"#base $b") ++
         hw.map(h => s"#hw $h") ++
-        quantizer.map(t => s"#q $t") ++
-        k.map(v => s"#k $v")
+        Seq(s"#q $quantizer", s"#k $k")
     val body = (header ++
       entries.toSeq.sortBy { case ((a, c), _) => (a, c) }
         .map { case ((a, c), t) => s"$a\t$c\t$t" } ++
@@ -1208,8 +1168,7 @@ object GraphMaintainer {
   /** Land one epoch's frozen quantizer as an immutable
     * `quantizers/<qtok>/` artifact — referenced by the manifest's `#q`
     * line, so the quantizer cuts over in the SAME atomic rename as the
-    * data it routes (the separate mutable `centroids/` dir of the legacy
-    * layout is read only as a fallback for pre-`#q` logs).
+    * data it routes.
     */
   private def landQuantizer(
       spark: SparkSession, workDir: String,
@@ -1221,31 +1180,13 @@ object GraphMaintainer {
     tok
   }
 
-  /** Load the quantizer a resolved state names — `quantizers/<qtok>/`,
-    * or the legacy `centroids/` dir when the log predates `#q`.
-    */
+  /** Load the quantizer a resolved state names — `quantizers/<qtok>/`. */
   private def loadQuantizer(
       spark: SparkSession, workDir: String,
-      q: Option[String]): Array[(Long, Array[Double], Double)] = {
+      q: String): Array[(Long, Array[Double], Double)] = {
     import spark.implicits._
-    val p = q.map(t => s"$workDir/quantizers/$t").getOrElse(s"$workDir/centroids")
-    spark.read.parquet(p)
+    spark.read.parquet(s"$workDir/quantizers/$q")
       .as[(Long, Array[Double], Double)].collect().sortBy(_._1)
-  }
-
-  /** The legacy replay high-water: the max over a pre-`#hw` deployment's
-    * `folded/` markers (swept `hw-` names and one-file-per-batchId
-    * names). Empty once the first `#hw`-carrying commit sweeps the dir.
-    */
-  private[graft] def legacyFoldedHw(fs: FileSystem, workDir: String): Option[Long] = {
-    val dir = new Path(s"$workDir/folded")
-    if (!fs.exists(dir)) return None
-    fs.listStatus(dir).toSeq.map(_.getPath.getName).collect {
-      case n if n.startsWith("hw-") &&
-          n.stripPrefix("hw-").forall(_.isDigit) =>
-        n.stripPrefix("hw-").toLong
-      case n if n.nonEmpty && n.forall(_.isDigit) => n.toLong
-    }.maxOption
   }
 
   /** Read one artifact at a manifest's state, optionally pruned to a cell
@@ -1280,11 +1221,7 @@ object GraphMaintainer {
     * refresh-time corpus, then maintain from there. Over an EXISTING
     * workDir this is an in-place epoch rebuild: the replay high-water
     * carries across (the attached stream's checkpoint keeps its
-    * batchIds), the old state stays readable until vacuum ages it out,
-    * and any pre-manifest legacy `routing/`/`graph/` dirs at the root —
-    * superseded by this fresh epoch, but outside `data/` where vacuum
-    * sweeps — are reclaimed NOW rather than lingering unreferenced
-    * forever.
+    * batchIds) and the old state stays readable until vacuum ages it out.
     */
   def build(initialCorpus: DataFrame, workDir: String,
       k: Int = 5, nCentroids: Option[Int] = None): GraphMaintainer = {
@@ -1294,19 +1231,17 @@ object GraphMaintainer {
     val epoch = OwnerFence.acquire(fs, s"$workDir/owner")
     val prior = manifestNames(fs, workDir).lastOption
       .map(resolveState(fs, workDir, _))
-    val priorHw = (prior.flatMap(_.hw).toSeq ++
-      legacyFoldedHw(fs, workDir).toSeq).maxOption
+    val priorHw = prior.flatMap(_.hw)
     val corpus = narrow(initialCorpus)
     // unsized sizing, same contract as rebuildEpoch: over an EXISTING
     // epoch (this build is the in-place rebuild path) INHERIT the live
     // quantizer's geometry — an explicitly-sized 64-cell index must not
     // silently re-fit to a corpus-derived count through the sibling
-    // entry point; on a fresh workDir (or a pre-#q legacy log) derive
-    // from the corpus (√n clamped) — the 100 TB entry point must not
-    // default to a fixture-scale constant. Explicit callers always win.
+    // entry point; on a fresh workDir derive from the corpus (√n
+    // clamped) — the 100 TB entry point must not default to a
+    // fixture-scale constant. Explicit callers always win.
     val sized = nCentroids.orElse(
-      prior.flatMap(_.quantizer)
-        .map(q => loadQuantizer(spark, workDir, Some(q)).length))
+      prior.map(p => loadQuantizer(spark, workDir, p.quantizer).length))
     val cs = sized match {
       case Some(nc) => SimilaritySearch.ivfCentroids(corpus, nc)
       case None =>
@@ -1320,17 +1255,15 @@ object GraphMaintainer {
         SimilaritySearch.fetchCentroids(corpus, ids.take(derivedNCentroids(n)))
     }
     // quantizer land ∥ cell-assign materialization, as in rebuildEpoch
-    val qTokFut = scala.concurrent.Future(
-      landQuantizer(spark, workDir, cs))(graft.operators.Par.overlapEc)
     val bcast = spark.sparkContext.broadcast(cs)
-    val cells = SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint()
-    val qTok = scala.concurrent.Await.result(
-      qTokFut, scala.concurrent.duration.Duration.Inf)
+    val (qTok, cells) = overlap(
+      landQuantizer(spark, workDir, cs),
+      SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint())
     // one exchange for the whole edge path: hash on cell, window keyed
     // (cell, vec_id) — row-identical to the (vec_id) window since a
     // vector routes to exactly one cell — then land WITHOUT the second
     // repartition (preClustered). The routing land overlaps the edge
-    // compute+land on a second thread (independent jobs, §2.6).
+    // compute+land (independent jobs, §2.6).
     val w = Window.partitionBy(col("cell"), col("vec_id"))
       .orderBy(col("cos").desc, col("neighbor_id"))
     val edges = SimilaritySearch.cellEdgesWithCell(cells, cells)
@@ -1338,35 +1271,19 @@ object GraphMaintainer {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"), col("cell"))
-    val rFut = scala.concurrent.Future(
-      landCells(fs, workDir, cells, RoutingArt))(GraphMaintainer.landEc)
-    val (gTok, gCells) = landCells(fs, workDir, edges, GraphArt, preClustered = true)
-    val (rTok, rCells) = scala.concurrent.Await.result(
-      rFut, scala.concurrent.duration.Duration.Inf)
+    val ((rTok, rCells), (gTok, gCells)) = overlap(
+      landCells(fs, workDir, cells, RoutingArt),
+      landCells(fs, workDir, edges, GraphArt, preClustered = true))
     val entries = (rCells.map(c => (RoutingArt, c) -> rTok) ++
       gCells.map(c => (GraphArt, c) -> gTok)).toMap
-    val name = commitManifest(fs, workDir, epoch, entries,
-      hw = priorHw, quantizer = Some(qTok), k = Some(k))
-    // reclamation strictly AFTER the commit point (a build that crashes
-    // mid-land must leave the prior serving state intact — deleting the
-    // legacy dirs before the rename would let a crash lose the old
-    // corpus with nothing published to replace it): the legacy root
-    // routing/ + graph/ dirs this epoch supersedes (vacuum never reaches
-    // them — they sit outside data/), and the folded/ marker dir whose
-    // high-water now rides the manifest. A crash between the rename and
-    // these deletes leaves never-served bytes only — safe direction.
-    Seq(RoutingArt, GraphArt).foreach { a =>
-      fs.delete(new Path(s"$workDir/$a"), true); ()
-    }
-    fs.delete(new Path(s"$workDir/folded"), true)
+    val name = commitManifest(fs, workDir, epoch, entries, qTok, k, hw = priorHw)
     // per-cell audit + Bloom sizing in ONE aggregate (replaces the bare
     // count()): flags quantizer skew — guide §2.5 — without an extra job
     val (nRows, hot) = cellStats(cells, cs.length)
     warnHotCells(s"build($workDir)", nRows, hot)
-    new GraphMaintainer(spark, workDir, k, bcast,
+    new GraphMaintainer(spark, workDir, bcast,
       bloomOf(cells.select(col("vec_id")), nRows), epoch,
-      GraphState(entries, priorHw, Some(qTok), Some(k), 0),
-      Some(name))
+      GraphState(entries, priorHw, qTok, k, 0), name)
   }
 
   /** Open a READER on `workDir` — the cross-JVM subscriber role: no
@@ -1383,75 +1300,23 @@ object GraphMaintainer {
   /** Reopen `workDir` after a restart: the manifest-named quantizer and
     * the latest commit's routing/graph are the landed artifacts, so the
     * recovered maintainer's next fold equals the uninterrupted one's
-    * (GraphMaintenanceSpec pins it). A pre-manifest workDir (the
-    * partition-overwrite layout this format replaced) migrates in place:
-    * its cell directories rename under a `legacy` token and the first
-    * manifest pins them. Pre-`#q`/`#k` logs fall back to the legacy
-    * `centroids/` dir and `meta.json`.
+    * (GraphMaintenanceSpec pins it). A workDir with no manifest holds no
+    * epoch to recover and is refused — [[build]] creates one.
     */
   def recover(spark: SparkSession, workDir: String): GraphMaintainer = {
     val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val epoch = OwnerFence.acquire(fs, s"$workDir/owner")
-    if (manifestNames(fs, workDir).isEmpty) migrateLegacy(fs, workDir, epoch)
     // pin the commit the caches are built at BEFORE building them, so a
     // racing commit between the two is detected (not masked) at the
     // first fold's resolveBase
-    val name0 = manifestNames(fs, workDir).lastOption
-    val st = name0.map(resolveState(fs, workDir, _)).getOrElse(GraphState.empty)
-    val k = st.kOpt.getOrElse {
-      val in = fs.open(new Path(s"$workDir/meta.json"))
-      val meta = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-      """"k":(\d+)""".r.findFirstMatchIn(meta)
-        .map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(s"$workDir/meta.json: no k"))
-    }
-    val cs = loadQuantizer(spark, workDir, st.quantizer)
-    val hw0 = (st.hw.toSeq ++ legacyFoldedHw(fs, workDir).toSeq).maxOption
-    new GraphMaintainer(spark, workDir, k,
-      spark.sparkContext.broadcast(cs),
-      bloomOf(spark, workDir, st.entries), epoch,
-      st.copy(hw = hw0), name0)
-  }
-
-  /** One-time in-place migration from the pre-manifest layout
-    * (`<workDir>/{routing,graph}/cell=<c>/` rewritten by dynamic
-    * partition overwrite): each cell directory RENAMES under
-    * `data/<artifact>/fold=legacy/` — a metadata move, no data copied —
-    * and the first manifest pins them (embedding the `folded/` dir's
-    * high-water, whose directory then sweeps), after which every commit
-    * is atomic. Runs under the just-acquired epoch, so a still-live old
-    * maintainer is already fenced before the move.
-    */
-  private def migrateLegacy(fs: FileSystem, workDir: String, epoch: Int): Unit = {
-    val entries = Seq(RoutingArt, GraphArt).flatMap { a =>
-      val old = new Path(s"$workDir/$a")
-      val dest = new Path(s"$workDir/data/$a/fold=legacy")
-      if (fs.exists(old)) {
-        fs.mkdirs(dest)
-        fs.listStatus(old).toSeq.map(_.getPath)
-          .filter(_.getName.startsWith("cell="))
-          .foreach { c =>
-            require(fs.rename(c, new Path(dest, c.getName)),
-              s"GraphMaintainer: legacy migration could not move $c")
-          }
-        fs.delete(old, true) // _SUCCESS / crc debris
-      }
-      // the manifest pins what is under the DESTINATION, not what this
-      // run happened to move: a migration that crashed mid-rename on a
-      // prior recover() already moved some cells there, and pinning only
-      // the freshly-moved remainder would silently drop them from the
-      // first manifest — permanent loss once vacuum sweeps the
-      // unreferenced slices (crash-idempotence over the rename loop)
-      if (!fs.exists(dest)) Nil
-      else fs.listStatus(dest).toSeq.map(_.getPath.getName)
-        .collect { case n if n.startsWith("cell=") =>
-          (a, n.stripPrefix("cell=").toLong) -> "legacy"
-        }
-    }.toMap
-    commitManifest(fs, workDir, epoch, entries,
-      hw = legacyFoldedHw(fs, workDir))
-    fs.delete(new Path(s"$workDir/folded"), true)
-    ()
+    val name0 = manifestNames(fs, workDir).lastOption.getOrElse(
+      throw new IllegalStateException(
+        s"GraphMaintainer.recover: no manifest under $workDir/_commits — " +
+          "nothing to recover; create the epoch with GraphMaintainer.build"))
+    val st = resolveState(fs, workDir, name0)
+    new GraphMaintainer(spark, workDir,
+      spark.sparkContext.broadcast(loadQuantizer(spark, workDir, st.quantizer)),
+      bloomOf(spark, workDir, st.entries), epoch, st, name0)
   }
 
   /** Driver-held Bloom over every id stored at `entries` — the O(1)

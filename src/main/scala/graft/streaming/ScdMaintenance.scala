@@ -131,8 +131,7 @@ final class ScdMaintainer private (
 
   /** Streaming batchIds the FOLD arm dedupes on. Markers keep one
     * high-water id per arm, so after any fold this is the singleton
-    * {maxFoldedId} (a legacy full-set marker reads back collapsed the
-    * same way); empty right after build.
+    * {maxFoldedId}; empty right after build.
     */
   def foldedBatches: Set[Long] =
     armHighWater(markerOf(fs, workDir, currentVersion).folded, "fold")
@@ -593,8 +592,8 @@ object ScdMaintainer {
   // implementation serves both the manifest A-lines and the pair markers
 
   /** The arm's recorded high-water batchId (None before its first
-    * commit). Entries are `arm#<long>`; a legacy marker may hold many —
-    * the max IS the high-water under the monotone-batchId contract.
+    * commit). Entries are `arm#<long>`; the max IS the high-water under
+    * the monotone-batchId contract.
     */
   private def armHighWater(folded: Set[String], arm: String): Option[Long] =
     LakeTable.armMaxId(folded, arm)
@@ -610,16 +609,18 @@ object ScdMaintainer {
 
   private def markerOf(
       fs: org.apache.hadoop.fs.FileSystem, workDir: String, v: Int): Marker = {
-    val in = fs.open(markerPath(workDir, v))
+    val file = markerPath(workDir, v)
+    val in = fs.open(file)
     val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
       .getLines().toVector finally in.close()
-    Marker(
-      lines(0).toInt, lines(1).toInt,
-      lines.drop(2).filter(_.nonEmpty)
-        // bare ids are the pre-namespacing pair-marker format (only the
-        // fold arm existed then): read them as fold-arm ids so a marker
-        // written before the forget arm landed keeps its dedup records
-        .map(l => if (l.forall(_.isDigit)) s"fold#$l" else l).toSet)
+    val folded = lines.drop(2).filter(_.nonEmpty).toSet
+    // a bare id names no arm: dropping it would re-apply its batch
+    folded.find(!_.contains('#')).foreach { b =>
+      throw new IllegalStateException(
+        s"ScdMaintainer: pair marker $file carries a bare replay id '$b' — " +
+          "entries are arm#batchId; a bare id names no arm and is not read")
+    }
+    Marker(lines(0).toInt, lines(1).toInt, folded)
   }
 
   /** Atomic marker publication: full content to a tmp name, then

@@ -16,8 +16,7 @@ import graft.streaming.{LocalCheckpointFileManager, TransitPipeline}
   * checkpoint files; the third run reads them back. The served state must
   * then equal [[graft.operators.Transit]]'s batch result over all events.
   *
-  * The station network is the in-repo golden dashboard's: line, name and
-  * order of every row, station ids by row position.
+  * The station network is the in-repo golden dashboard's ([[TestStations]]).
   */
 class CheckpointRestartSpec extends SparkSpec {
   import spark.implicits._
@@ -27,15 +26,6 @@ class CheckpointRestartSpec extends SparkSpec {
   private val SparkDefault = Some(classOf[FileContextBasedCheckpointFileManager].getName)
   /** Key unset: [[TransitPipeline.start]] installs the local manager. */
   private val Local = None
-
-  private lazy val stationsByLine: Map[String, Seq[(Int, String, Int)]] = {
-    val src = scala.io.Source.fromFile("src/test/resources/golden_dashboard.txt", "UTF-8")
-    val rows = try src.getLines().filter(_.nonEmpty).toList finally src.close()
-    rows.zipWithIndex.map { case (l, i) =>
-      val f = l.split('|')
-      (f(0), (40000 + 10 * i, f(2), f(3).toInt))
-    }.groupMap(_._1)(_._2).map { case (line, ss) => line -> ss.sortBy(_._3) }
-  }
 
   private def withManager[A](cls: Option[String])(body: => A): A = {
     val prev = spark.conf.getOption(Key)
@@ -54,7 +44,7 @@ class CheckpointRestartSpec extends SparkSpec {
       s"$root/arrivals", s"$root/turnstile", s"$root/weather", s"$root/chk",
       triggerMs = 100L)
     val sim = new graft.sim.Simulator(
-      stationsByLine, Map.empty, (0 until 24).map(_ -> 0.15).toMap, numTrains = 3)
+      TestStations.byLine, Map.empty, (0 until 24).map(_ -> 0.15).toMap, numTrains = 3)
     val (arrivals, turnstiles, weather) = sim.run(36)
     def third[T](xs: Seq[T], k: Int): Seq[T] = xs.slice(xs.size * k / 3, xs.size * (k + 1) / 3)
     def dump[T <: Product : Encoder](rows: Seq[T], dir: String): Unit =

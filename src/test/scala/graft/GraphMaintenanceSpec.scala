@@ -5,6 +5,39 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.SimilaritySearch
 import graft.streaming.GraphMaintainer
 
+/** A local filesystem under the `faultyland:` scheme that, while armed,
+  * fails every directory or file creation under a graph-artifact token
+  * directory and stalls the first one under a routing token directory
+  * for three seconds — so one land fails while its sibling is still in
+  * flight.
+  */
+class FaultyLandFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+  override def getUri: java.net.URI = java.net.URI.create("faultyland:///")
+  override def getScheme: String = "faultyland"
+  private def check(p: Path): Unit = if (FaultyLandFileSystem.armed) {
+    if (p.toString.contains("/data/graph/fold="))
+      throw new java.io.IOException(s"injected land failure at $p")
+    if (p.toString.contains("/data/routing/fold=") &&
+        FaultyLandFileSystem.stalled.compareAndSet(false, true))
+      Thread.sleep(3000)
+  }
+  override def mkdirs(p: Path): Boolean = { check(p); super.mkdirs(p) }
+  override def mkdirs(p: Path, permission: FsPermission): Boolean = { check(p); super.mkdirs(p, permission) }
+  override def create(
+      p: Path, overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(p)
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FaultyLandFileSystem {
+  @volatile var armed = false
+  val stalled = new java.util.concurrent.atomic.AtomicBoolean(false)
+}
+
 class GraphMaintenanceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,6 +52,12 @@ class GraphMaintenanceSpec extends SparkSpec {
         quantizerSource = Some(old))
       .collect().map(_.toSeq).toSet
   }
+
+  /** The live epoch's state — its quantizer token and k are what a
+    * hand-forged commit must name, like every real one.
+    */
+  private def liveState(fs: org.apache.hadoop.fs.FileSystem, dir: String) =
+    GraphMaintainer.resolveState(fs, dir, GraphMaintainer.manifestNames(fs, dir).last)
 
   test("chained folds equal the frozen-quantizer full rebuild") {
     val emb = Tables.embeddings(spark, sf)
@@ -138,30 +177,20 @@ class GraphMaintenanceSpec extends SparkSpec {
     assert(e.getMessage.contains("FENCED"), e.getMessage)
   }
 
-  test("the replay high-water rides the manifest; legacy folded/ markers are honored, migrated, and swept") {
+  test("the replay high-water rides the manifest and survives a restart") {
     val emb = Tables.embeddings(spark, sf)
     val dir = tmp("hw")
     val m = GraphMaintainer.build(emb.filter(col("vec_id") % 5 =!= 0), dir, nCentroids = Some(16))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a legacy per-batch marker left by a pre-`#hw` deployment
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/folded"))
-    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/folded/2"))
-    // its id must still dedupe (max semantics under monotone batchIds)...
-    assert(m.fold(emb.filter(col("vec_id") % 5 === 0).limit(1), Some(1L))
-      .isEmpty, "batch 1 <= legacy high-water 2 must be recognized as folded")
     val fresh = emb.filter(col("vec_id") % 5 === 0)
     (3L to 8L).foreach { id =>
       m.fold(fresh.filter(col("vec_id") % 7 === id - 3), Some(id))
     }
     // marker-advance and data-commit are ONE atomic rename: the manifest
-    // itself carries the high-water, and the legacy marker dir (its max
-    // now embedded) swept with the first commit — no separate marker
-    // directory needs its own retention ever again
-    assert(GraphMaintainer.latestState(fs, dir).hw.contains(8L),
+    // itself carries the high-water — no separate marker directory
+    assert(liveState(fs, dir).hw.contains(8L),
       "the latest commit must carry the max applied batchId")
-    assert(!new java.io.File(s"$dir/folded").exists(),
-      "the legacy folded/ dir must sweep once the manifest carries its value")
     assert(m.fold(fresh.limit(1), Some(5L)).isEmpty,
       "a superseded batchId must no-op against the high-water")
     // the persisted value survives a restart — a recovered maintainer
@@ -332,8 +361,9 @@ class GraphMaintenanceSpec extends SparkSpec {
     // published (the fencing-token backstop the raw partition overwrite
     // never had). Simulate that worst case by committing directly with
     // the old epoch:
+    val live = liveState(fs, dir)
     GraphMaintainer.commitManifest(fs, dir, epoch = 1,
-      Map((GraphMaintainer.GraphArt, 0L) -> "tzombie"))
+      Map((GraphMaintainer.GraphArt, 0L) -> "tzombie"), live.quantizer, live.k)
     assert(GraphMaintainer.latestEntries(fs, dir) == served,
       "a lower-epoch manifest landing after the takeover must be invisible")
     assert(m2.graph.collect().map(_.toSeq).toSet == servedGraph)
@@ -385,35 +415,6 @@ class GraphMaintenanceSpec extends SparkSpec {
     }
   }
 
-  /** Lay down the PRE-MANIFEST format by hand: cell-partitioned
-    * routing/ and graph/ at the workDir root, centroids, meta.json —
-    * exactly what the partition-overwrite build wrote.
-    */
-  private def layLegacy(dir: String,
-      old: org.apache.spark.sql.DataFrame): Unit = {
-    graft.plans.GraftFunctions.register(spark)
-    val cs = SimilaritySearch.ivfCentroids(
-      old.select(col("vec_id"), col("embedding")), 16)
-    cs.toSeq.toDF("cid", "emb", "norm")
-      .coalesce(1).write.parquet(s"$dir/centroids")
-    val cells = SimilaritySearch.cellAssign(
-      old.select(col("vec_id"), col("embedding")),
-      spark.sparkContext.broadcast(cs)).localCheckpoint()
-    cells.repartition(col("cell"))
-      .write.partitionBy("cell").parquet(s"$dir/routing")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("cos").desc, col("neighbor_id"))
-    SimilaritySearch.cellEdgesWithCell(cells, cells)
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-      .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"), col("cell"))
-      .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(s"$dir/graph")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/meta.json"),
-      """{"k":5}""".getBytes("UTF-8"))
-    ()
-  }
-
   test("a foreign commit becoming visible refreshes the replay prescreen: the redelivered batch duplicates nothing") {
     val emb = Tables.embeddings(spark, sf)
     val old = emb.filter(col("vec_id") % 5 =!= 0)
@@ -447,9 +448,11 @@ class GraphMaintenanceSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     import spark.implicits._
     val cells = allCells.select(col("cell")).distinct().as[Long].collect()
+    val live = liveState(fs, dir)
     GraphMaintainer.commitManifest(fs, dir, epoch = 1,
       (cells.map(c => (GraphMaintainer.RoutingArt, c) -> "tzombie") ++
-        cells.map(c => (GraphMaintainer.GraphArt, c) -> "tzombie")).toMap)
+        cells.map(c => (GraphMaintainer.GraphArt, c) -> "tzombie")).toMap,
+      live.quantizer, live.k)
     assert(m2.corpus.count() == emb.count(), "the zombie's commit is visible")
     // the redelivered batch: a stale construction-time Bloom would miss
     // b1's ids, skip the replay probe, and DUPLICATE every row into
@@ -464,73 +467,6 @@ class GraphMaintenanceSpec extends SparkSpec {
     assert(m2.fold(b1, Some(7L)).isEmpty)
   }
 
-  test("a pre-manifest workDir migrates in place on recover and folds on atomically") {
-    val emb = Tables.embeddings(spark, sf)
-    val old = emb.filter(col("vec_id") % 5 =!= 0)
-    val batch = emb.filter(col("vec_id") % 5 === 0)
-    val dir = tmp("legacy")
-    layLegacy(dir, old)
-    // recover migrates: cell dirs RENAME under data/<artifact>/fold=legacy
-    // and the first manifest pins them — no data is copied
-    val m = GraphMaintainer.recover(spark, dir)
-    assert(!new java.io.File(s"$dir/routing").exists() &&
-      !new java.io.File(s"$dir/graph").exists(),
-      "legacy dirs must move, not copy")
-    assert(m.corpus.count() == old.count())
-    m.fold(batch, Some(1L))
-    assert(m.graph.collect().map(_.toSeq).toSet == rebuildWant,
-      "a migrated artifact must fold on exactly")
-  }
-
-  test("a migration that crashed mid-rename resumes without dropping the already-moved cells") {
-    val emb = Tables.embeddings(spark, sf)
-    val old = emb.filter(col("vec_id") % 5 =!= 0)
-    val dir = tmp("legacycrash")
-    layLegacy(dir, old)
-    // simulate the prior recover() dying MID-migration: half the routing
-    // cell dirs already moved under the legacy token, no manifest yet —
-    // a re-run that pinned only the not-yet-moved remainder would
-    // silently drop the moved cells from the first manifest (permanent
-    // loss once vacuum sweeps the unreferenced slices)
-    val dest = new java.io.File(s"$dir/data/routing/fold=legacy")
-    java.nio.file.Files.createDirectories(dest.toPath)
-    val cellDirs = new java.io.File(s"$dir/routing").listFiles()
-      .filter(_.getName.startsWith("cell=")).sortBy(_.getName)
-    assert(cellDirs.length >= 2, "fixture needs several cells")
-    cellDirs.take(cellDirs.length / 2).foreach { c =>
-      assert(c.renameTo(new java.io.File(dest, c.getName)))
-    }
-    val m = GraphMaintainer.recover(spark, dir)
-    assert(m.corpus.count() == old.count(),
-      "the resumed migration must pin moved AND unmoved cells")
-    assert(m.graph.collect().map(_.toSeq).toSet ==
-      SimilaritySearch.knnGraph(old, quantizerSource = Some(old))
-        .collect().map(_.toSeq).toSet,
-      "the migrated artifact serves the full pre-crash graph")
-  }
-
-  test("build over a pre-manifest workDir supersedes AND reclaims the legacy dirs (after its commit)") {
-    val emb = Tables.embeddings(spark, sf)
-    val old = emb.filter(col("vec_id") % 5 =!= 0)
-    val dir = tmp("legacybuild")
-    layLegacy(dir, old)
-    // a fresh-epoch build over the legacy layout: the old root
-    // routing/ + graph/ are superseded by the first commit and
-    // reclaimed (they sit outside data/ where vacuum sweeps, so left
-    // in place they would linger forever, never served) — strictly
-    // AFTER the commit point, so a build that crashes mid-land leaves
-    // the prior state intact for recover()
-    val m = GraphMaintainer.build(
-      emb.select(col("vec_id"), col("embedding")), dir, nCentroids = Some(16))
-    assert(!new java.io.File(s"$dir/routing").exists() &&
-      !new java.io.File(s"$dir/graph").exists(),
-      "the superseded legacy dirs must be reclaimed by the build")
-    assert(m.graph.collect().map(_.toSeq).toSet ==
-      SimilaritySearch.knnGraph(emb.select(col("vec_id"), col("embedding")))
-        .collect().map(_.toSeq).toSet,
-      "the fresh epoch serves the full rebuild")
-  }
-
   test("commit-name field overflow fails loud AT the commit point, never an unlistable (silently lost) manifest") {
     val emb = Tables.embeddings(spark, sf)
     val dir = tmp("overflow")
@@ -543,7 +479,7 @@ class GraphMaintenanceSpec extends SparkSpec {
     // regression check, with a retire silently unserved until then
     val e = intercept[IllegalArgumentException](
       GraphMaintainer.commitManifest(fs, dir, epoch = 1000000,
-        Map((GraphMaintainer.GraphArt, 0L) -> "tovfl")))
+        Map((GraphMaintainer.GraphArt, 0L) -> "tovfl"), "qovfl", 5))
     assert(e.getMessage.contains("overflow"), e.getMessage)
     assert(GraphMaintainer.manifestNames(fs, dir).size == 1,
       "the refused commit must have landed nothing")
@@ -568,6 +504,62 @@ class GraphMaintenanceSpec extends SparkSpec {
       GraphMaintainer.readCommit(fs, dir, name))
     assert(e.getMessage.contains(name) && e.getMessage.contains("corrupt"),
       s"the error must NAME the damaged manifest: ${e.getMessage}")
+  }
+
+  test("a header-less manifest fails loud, naming the file") {
+    val emb = Tables.embeddings(spark, sf)
+    val dir = tmp("noheader")
+    GraphMaintainer.build(emb.filter(col("vec_id") % 5 =!= 0), dir, nCentroids = Some(16))
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val name = GraphMaintainer.manifestNames(fs, dir).head
+    val p = java.nio.file.Paths.get(s"$dir/_commits/$name")
+    // the same entry lines with every `#` line stripped: no header, no
+    // #q/#k — nothing says whether it is a checkpoint or what it routes by
+    val body = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      .linesIterator.filterNot(_.startsWith("#")).mkString("\n")
+    java.nio.file.Files.write(p, body.getBytes("UTF-8"))
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$dir/_commits/.$name.crc"))
+    val e = intercept[IllegalStateException](GraphMaintainer.recover(spark, dir))
+    assert(e.getMessage.contains(name) && e.getMessage.contains("#graft-manifest"),
+      s"the error must NAME the header-less manifest: ${e.getMessage}")
+  }
+
+  test("recover on a workDir with no manifest refuses and names build") {
+    val dir = tmp("nomanifest")
+    val e = intercept[IllegalStateException](GraphMaintainer.recover(spark, dir))
+    assert(e.getMessage.contains(dir) && e.getMessage.contains("GraphMaintainer.build"),
+      e.getMessage)
+  }
+
+  test("a failed land surfaces only after the other land settles") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.faultyland.impl", classOf[FaultyLandFileSystem].getName)
+    val emb = Tables.embeddings(spark, sf)
+    val dir = tmp("faultyland")
+    val m = GraphMaintainer.build(
+      emb.filter(col("vec_id") % 5 =!= 0), s"faultyland://$dir", nCentroids = Some(16))
+    val batch = emb.filter(col("vec_id") % 5 === 0)
+    def routingTokens = new java.io.File(s"$dir/data/routing").list()
+      .filter(_.startsWith("fold=")).toSet
+    val before = routingTokens
+    FaultyLandFileSystem.stalled.set(false)
+    FaultyLandFileSystem.armed = true
+    val e = try intercept[Exception](m.fold(batch, Some(1L)))
+      finally FaultyLandFileSystem.armed = false
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => Option(x.getMessage).exists(_.contains("/data/graph/fold="))),
+      s"the graph land's failure surfaces: $e")
+    // the stalled routing land had finished — its write job committed —
+    // by the time the graph land's error reached the caller
+    val landed = routingTokens -- before
+    assert(landed.size == 1, s"one routing land ran beside the failed one: $landed")
+    assert(new java.io.File(s"$dir/data/routing/${landed.head}/_SUCCESS").exists(),
+      "the routing land must settle before the failure surfaces")
+    // nothing was published: the redelivered batch folds exactly
+    m.fold(batch, Some(1L))
+    assert(m.graph.collect().map(_.toSeq).toSet == rebuildWant)
   }
 
   test("commits are deltas of the touched cells, checkpoint-anchored: per-commit bytes track the batch, never the corpus") {
@@ -612,48 +604,6 @@ class GraphMaintenanceSpec extends SparkSpec {
         quantizerSource = Some(old))
       .collect().map(_.toSeq).toSet
     assert(m.graph.collect().map(_.toSeq).toSet == want)
-  }
-
-  test("mixed-format upgrade in place: v2 deltas fold on top of a pre-delta full-map manifest") {
-    val emb = Tables.embeddings(spark, sf)
-    val old = emb.filter(col("vec_id") % 5 =!= 0)
-    val batch = emb.filter(col("vec_id") % 5 === 0)
-    val dir = tmp("mixedfmt")
-    val m0 = GraphMaintainer.build(old, dir, nCentroids = Some(16))
-    // rewrite the build's commit as the OLD format: bare entry lines, no
-    // header — and lay the old sidecars its readers used (meta.json for
-    // k, centroids/ for the quantizer), exactly what a pre-delta-log
-    // deployment left behind
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val name0 = GraphMaintainer.manifestNames(fs, dir).head
-    val p0 = java.nio.file.Paths.get(s"$dir/_commits/$name0")
-    val v1Body = java.nio.file.Files.readAllLines(p0).toArray.map(_.toString)
-      .filterNot(l => l.startsWith("#") || l.isEmpty).mkString("\n")
-    java.nio.file.Files.write(p0, v1Body.getBytes("UTF-8"))
-    // drop the stale Hadoop checksum sidecar the out-of-band rewrite left
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dir/_commits/.$name0.crc"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/meta.json"),
-      """{"k":5}""".getBytes("UTF-8"))
-    val qTok = new java.io.File(s"$dir/quantizers").listFiles().head.getName
-    spark.read.parquet(s"$dir/quantizers/$qTok")
-      .coalesce(1).write.parquet(s"$dir/centroids")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/quantizers"), true)
-    // a recovered maintainer reads the v1 manifest as a checkpoint (falls
-    // back to the sidecars) and folds on with v2 deltas CHAINED TO IT
-    val m = GraphMaintainer.recover(spark, dir)
-    m.fold(batch, Some(1L))
-    assert(m.graph.collect().map(_.toSeq).toSet == rebuildWant,
-      "a fold over the v1 base must be exact")
-    val names = GraphMaintainer.manifestNames(fs, dir)
-    val head = GraphMaintainer.readCommit(fs, dir, names.last)
-    assert(!head.checkpoint && head.base.contains(name0),
-      "the new commit must be a delta pinned to the v1 full-map base")
-    // resolution walks across the format boundary
-    assert(GraphMaintainer.resolveState(fs, dir, names.last).entries ==
-      GraphMaintainer.latestEntries(fs, dir))
-    assert(m.corpus.count() == emb.count())
   }
 
   test("vacuum clamps retention to current+previous: an in-flight reader's resolved manifest survives keep=1") {
@@ -805,8 +755,7 @@ class GraphMaintenanceSpec extends SparkSpec {
         .map(c => (GraphMaintainer.RoutingArt, c) -> "tforeignr0000000") ++
        land(edges, GraphMaintainer.GraphArt, "tforeigng0000000")
         .map(c => (GraphMaintainer.GraphArt, c) -> "tforeigng0000000")).toMap
-    GraphMaintainer.commitManifest(fs, dir, 1, entries,
-      quantizer = Some(qTok), k = Some(k2))
+    GraphMaintainer.commitManifest(fs, dir, 1, entries, quantizer = qTok, k = k2)
     // the owner folds a fresh batch: resolveBase must adopt the WHOLE
     // foreign epoch — quantizer, k, entries — and the fold stays exact
     val batch = emb.filter(col("vec_id") % 5 === 0)
@@ -817,9 +766,9 @@ class GraphMaintenanceSpec extends SparkSpec {
     assert(m.k == k2, "the foreign epoch's k must be adopted")
     val head = GraphMaintainer.readCommit(fs, dir,
       GraphMaintainer.manifestNames(fs, dir).last)
-    assert(head.quantizer.contains(qTok),
+    assert(head.quantizer == qTok,
       "the owner's next commit must re-stamp the FOREIGN #q, not the stale one")
-    assert(head.kOpt.contains(k2))
+    assert(head.k == k2)
     val want = SimilaritySearch.knnGraph(
         survivors.unionByName(batch), k = k2, nCentroids = 8,
         quantizerSource = Some(survivors))
@@ -846,7 +795,8 @@ class GraphMaintenanceSpec extends SparkSpec {
     // a foreign head (a fenced zombie's late empty delta) must fall
     // through to the pinned chain walk and serve the RESOLVED state
     val head = GraphMaintainer.manifestNames(fs, dir).last
-    GraphMaintainer.commitManifest(fs, dir, 1, Map.empty,
+    val live = liveState(fs, dir)
+    GraphMaintainer.commitManifest(fs, dir, 1, Map.empty, live.quantizer, live.k,
       checkpoint = false, base = Some(head), hw = Some(999L))
     assert(m.corpus.count() == served,
       "an empty foreign delta resolves to the same served state")
@@ -935,13 +885,14 @@ class GraphMaintenanceSpec extends SparkSpec {
     // the ADOPTED k, and an unsized-k rebuild must not re-stamp the stale 5
     val head = GraphMaintainer.manifestNames(fs, dir).last
     GraphMaintainer.commitManifest(fs, dir, 1, Map.empty,
-      checkpoint = false, base = Some(head), hw = Some(0L), k = Some(3))
+      liveState(fs, dir).quantizer, k = 3,
+      checkpoint = false, base = Some(head), hw = Some(0L))
     val survivors = m.corpus.filter(col("vec_id") % 3 =!= 0).localCheckpoint()
     m.rebuildEpoch(survivors) // unsized k AND unsized geometry
     assert(m.k == 3, "the foreign #k must be adopted, not the stale k=5")
     val newHead = GraphMaintainer.readCommit(fs, dir,
       GraphMaintainer.manifestNames(fs, dir).last)
-    assert(newHead.kOpt.contains(3),
+    assert(newHead.k == 3,
       "the rebuild's cutover must re-stamp the ADOPTED k")
     assert(m.centroidIds.length == 16, "geometry still inherited")
     val want = SimilaritySearch.knnGraph(

@@ -967,33 +967,24 @@ class LakeTableSpec extends SparkSpec {
       spark, dir, cursorDir, initial = "latest").isEmpty)
   }
 
-  test("legacy bare-batchId markers still dedupe arm-qualified replays") {
-    val (dir, _) = mkTable("graft-lakelegacy")
-    // simulate a manifest written BEFORE markers were arm-qualified:
-    // v2 = v1's full text plus a bare `A\t7` line
+  test("a manifest carrying a bare replay marker is refused, naming the file") {
+    val (dir, _) = mkTable("graft-lakebare")
+    // v2 = v1's full text plus a bare `A\t7` line: an id with no arm,
+    // which no reader can attribute to the stream that applied it
     val v1 = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/_commits/v000000001.txt")), "UTF-8")
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/_commits/v000000002.txt"),
       (v1 + "A\t7\n").getBytes("UTF-8"))
-    assert(LakeTable.latest(spark, dir).appliedBatches == Set("7"))
-    // a redelivery of batch 7 under the new arm-qualified marker must
-    // no-op — without the bare fallback it would re-apply and duplicate
-    val stats = LakeTable.applyChangelog(spark, dir,
+    val e = intercept[IllegalStateException](LakeTable.latest(spark, dir))
+    assert(e.getMessage.contains("v000000002.txt") && e.getMessage.contains("bare"),
+      e.getMessage)
+    // a redelivery of batch 7 refuses too, instead of re-applying it
+    intercept[IllegalStateException](LakeTable.applyChangelog(spark, dir,
       Seq((5L, 1L, "U", 99.0)).toDF("key", "seq", "op", "val"), Seq("key"),
-      batchId = Some(7L))
-    assert(stats.filesRewritten == 0 && stats.filesNew == 0)
-    assert(LakeTable.latest(spark, dir).version == 2,
-      "a legacy-marked replay must burn no version")
-    assert(LakeTable.readLive(spark, dir).filter(col("key") === 5L)
-      .head.getDouble(2) == 5 * 1.5, "the replayed change must not apply")
-    // ...while a genuinely new batchId still applies normally
-    LakeTable.applyChangelog(spark, dir,
-      Seq((5L, 2L, "U", 99.0)).toDF("key", "seq", "op", "val"), Seq("key"),
-      batchId = Some(8L))
-    assert(LakeTable.latest(spark, dir).version == 3)
-    assert(LakeTable.readLive(spark, dir).filter(col("key") === 5L)
-      .head.getDouble(2) == 99.0)
+      batchId = Some(7L)))
+    assert(!new java.io.File(s"$dir/_commits/v000000003.txt").exists(),
+      "a refused manifest must publish nothing on top of it")
   }
 
   test("box probes stay exact for integral keys above 2^53 (forget attestation on hash keys)") {
@@ -1240,46 +1231,6 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.restoreTo(spark, dir, v).version == v)
   }
 
-  test("migrateLegacyMarkers qualifies bare markers so new arms' low batchIds are not swallowed") {
-    val (dir, _) = mkTable("graft-lakemigrate")
-    val v1 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/_commits/v000000001.txt")), "UTF-8")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/_commits/v000000002.txt"),
-      (v1 + "A\t0\nA\t1\n").getBytes("UTF-8"))
-    // pre-migration: the bare fallback swallows a NEW arm's batch 0
-    val swallowed = LakeTable.applyTombstonesDv(
-      spark, dir, Seq(5L).toDF("key"), batchId = Some(0L))
-    assert(swallowed.filesShadowed == 0 &&
-      LakeTable.readLive(spark, dir).filter(col("key") === 5L).count() == 1,
-      "this is the hazard migrate exists for")
-    // migrate under EVERY arm that ever wrote bare markers (operator
-    // knowledge — a bare marker carries no attribution): both named
-    // legacy arms keep their idempotence
-    val migrated = LakeTable.migrateLegacyMarkers(
-      spark, dir, arms = Seq("cdc", "ingest"))
-    assert(migrated.appliedBatches == Set("cdc#1", "ingest#1"),
-      "numeric bares collapse to one high-water marker per named arm")
-    // post-migration: no bare marker remains, an UNNAMED new arm's batch
-    // applies
-    LakeTable.applyTombstonesDv(spark, dir, Seq(5L).toDF("key"),
-      batchId = Some(0L))
-    assert(LakeTable.readLive(spark, dir).filter(col("key") === 5L).isEmpty,
-      "after migration a new arm's batch 0 must apply")
-    // ...while BOTH named legacy arms stay deduped
-    val stats = LakeTable.applyChangelog(spark, dir,
-      Seq((7L, 1L, "U", 1.0)).toDF("key", "seq", "op", "val"), Seq("key"),
-      batchId = Some(0L))
-    assert(stats.filesRewritten == 0 && stats.filesNew == 0)
-    val stats2 = LakeTable.append(
-      Seq((901L, "dup", 1.0)).toDF("key", "name", "val"), dir, Seq("key"),
-      batchId = Some(1L))
-    assert(stats2.filesNew == 0, "the legacy ingest arm's batch 1 must dedupe")
-    // idempotent: a second migrate burns no version
-    val v = LakeTable.latest(spark, dir).version
-    assert(LakeTable.migrateLegacyMarkers(spark, dir).version == v)
-  }
-
   test("manifest sizes: commits carry Z lines, the compaction trigger is pure metadata") {
     val (dir, _) = mkTable("graft-lakesizes")
     val c = LakeTable.latest(spark, dir)
@@ -1455,7 +1406,7 @@ class LakeTableSpec extends SparkSpec {
     assert(LakeTable.latest(spark, dir).appliedBatches == Set("cdc#50"))
   }
 
-  test("latest() resolves from the swept _latest/ hint; mid-swap, stale, legacy and torn states heal") {
+  test("latest() resolves from the swept _latest/ hint; mid-swap and stale states heal") {
     val (dir, _) = mkTable("graft-lakeptr")
     LakeTable.append(Seq((900L, "n900", 9.0)).toDF("key", "name", "val"),
       dir, Seq("key")) // v2
@@ -1466,8 +1417,7 @@ class LakeTableSpec extends SparkSpec {
       "every commit lands the new hint and sweeps older ones")
     assert(LakeTable.latestVersion(spark, dir) == 2)
     // MID-SWAP reader: the new hint landed, an older one not yet swept —
-    // max wins; there is NO pointerless window (the old single-file
-    // delete+rename protocol had one, costing the full listing fallback)
+    // max wins; there is NO hintless window
     java.nio.file.Files.createFile(
       java.nio.file.Paths.get(s"$dir/_commits/_latest/v000000001.txt"))
     assert(LakeTable.latestVersion(spark, dir) == 2,
@@ -1478,28 +1428,22 @@ class LakeTableSpec extends SparkSpec {
     assert(hints == Seq("v000000001.txt"))
     assert(LakeTable.latestVersion(spark, dir) == 2,
       "a lagging hint must heal by probing forward")
-    // LEGACY single-file pointer (pre-subdir table): still honored
-    def rmAll(p: java.io.File): Unit = {
-      Option(p.listFiles()).foreach(_.foreach(rmAll)); p.delete(); ()
-    }
-    rmAll(new java.io.File(s"$dir/_commits/_latest"))
-    val legacy = java.nio.file.Paths.get(s"$dir/_commits/_latest.txt")
-    java.nio.file.Files.write(legacy, "2".getBytes("UTF-8"))
-    assert(LakeTable.latestVersion(spark, dir) == 2)
-    // TORN legacy pointer (garbage content): fallback, not a crash
-    java.nio.file.Files.write(legacy, "garbage".getBytes("UTF-8"))
-    assert(LakeTable.latestVersion(spark, dir) == 2)
-    // MISSING pointer entirely: full-listing fallback
-    java.nio.file.Files.delete(legacy)
+    assert(LakeTable.latest(spark, dir).version == 2)
+  }
+
+  test("a table with no _latest/ hint resolves its latest version by listing") {
+    val (dir, _) = mkTable("graft-lakenohint")
+    LakeTable.append(Seq((900L, "n900", 9.0)).toDF("key", "name", "val"),
+      dir, Seq("key")) // v2
+    val hd = new java.io.File(s"$dir/_commits/_latest")
+    Option(hd.listFiles()).foreach(_.foreach(_.delete()))
+    assert(hd.delete() && !hd.exists())
     assert(LakeTable.latestVersion(spark, dir) == 2)
     assert(LakeTable.latest(spark, dir).version == 2)
-    // the next commit lands the subdir hint and sweeps the legacy file
-    java.nio.file.Files.write(legacy, "1".getBytes("UTF-8"))
+    // the next commit lands the hint again
     LakeTable.append(Seq((901L, "n901", 9.1)).toDF("key", "name", "val"),
       dir, Seq("key"))
-    assert(hints == Seq(f"v${3}%09d.txt"))
-    assert(!java.nio.file.Files.exists(legacy),
-      "a commit migrates the legacy pointer away")
+    assert(hd.list().toSeq.filter(_.startsWith("v")) == Seq(f"v${3}%09d.txt"))
     assert(LakeTable.latestVersion(spark, dir) == 3)
   }
 

@@ -172,6 +172,23 @@ class ScdMaintenanceSpec extends SparkSpec {
     assert(rows(m.history) == rows(Cdc.scdHistory(log)))
   }
 
+  test("a pair marker carrying a bare id is refused, naming the file") {
+    val dir = tmp("baremarker")
+    val m = ScdMaintainer.build(log.limit(0), dir)
+    assert(m.fold(Seq((1L, 10L, "U", "a", 1.0))
+      .toDF("key", "seq", "op", "name", "val"), Some(0L)))
+    val marker = new java.io.File(s"$dir/fold").listFiles()
+      .filter(f => f.getName.startsWith("v") && f.getName.endsWith(".txt"))
+      .maxBy(_.getName)
+    // append a bare `7`: an id with no arm attribution
+    val text = new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8")
+    java.nio.file.Files.write(marker.toPath, (text + "\n7").getBytes("UTF-8"))
+    new java.io.File(marker.getParent, s".${marker.getName}.crc").delete()
+    val e = intercept[IllegalStateException](m.foldedBatches)
+    assert(e.getMessage.contains(marker.getName) && e.getMessage.contains("bare"),
+      e.getMessage)
+  }
+
   test("empty start: a fresh dimension builds from an empty log and folds from nothing") {
     val dir = tmp("empty")
     val m = ScdMaintainer.build(log.limit(0), dir)

@@ -20,7 +20,7 @@ class TransitPipelineSpec extends SparkSpec {
       triggerMs = 100L)
 
     val sim = graft.sim.Simulator.fromStations(
-      graft.sources.TransitData.stations(spark),
+      TestStations.frame(spark),
       hourlyRatio = Map(0 -> 0.125), numTrains = 3)
     val (arrivals, turnstiles, weather) = sim.run(24)
     val (a1, a2) = arrivals.splitAt(arrivals.size / 2)
@@ -69,7 +69,7 @@ class TransitPipelineSpec extends SparkSpec {
     // dashboard renders from recovered state
     dash2.upsertStations(
       graft.operators.Transit.transformStations(
-        graft.sources.TransitData.stations(spark))
+        TestStations.frame(spark))
         .dropDuplicates("station_id").as[TransformedStation])
     assert(dash2.rows.exists(_.total_turnstile_entries > 0))
   }

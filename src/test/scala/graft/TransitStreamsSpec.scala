@@ -57,7 +57,7 @@ class TransitStreamsSpec extends SparkSpec {
   test("stream and batch trainPositions agree on a 50-tick simulated replay") {
     implicit val sqlCtx = spark.sqlContext
     val sim = graft.sim.Simulator.fromStations(
-      graft.sources.TransitData.stations(spark), numTrains = 4)
+      TestStations.frame(spark), numTrains = 4)
     val (arrivals, _, _) = sim.run(50)
 
     // streaming result, fed in 5 chunks to exercise cross-batch state
@@ -164,7 +164,7 @@ class TransitStreamsSpec extends SparkSpec {
 
   test("end-to-end: sim → streams → dashboard serving state renders") {
     implicit val sqlCtx = spark.sqlContext
-    val stations = graft.sources.TransitData.stations(spark)
+    val stations = TestStations.frame(spark)
     val sim = graft.sim.Simulator.fromStations(
       stations, ridership = Map.empty, hourlyRatio = Map(0 -> 0.125), numTrains = 3)
     val (arrivals, turnstiles, weather) = sim.run(13)

@@ -19,7 +19,7 @@ class TwsOpsSpec extends SparkSpec {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       val sim = graft.sim.Simulator.fromStations(
-        graft.sources.TransitData.stations(spark), numTrains = 3)
+        TestStations.frame(spark), numTrains = 3)
       val (arrivals, _, _) = sim.run(20)
 
       val input = MemoryStream[Arrival]

@@ -124,7 +124,7 @@ class WindowsSpec extends SparkSpec {
   }
 
   test("rate-source synthetic turnstile stream emits well-formed events") {
-    val stations = graft.sources.TransitData.stations(spark)
+    val stations = TestStations.frame(spark)
     val stream = Windows.syntheticTurnstileStream(spark, stations, rowsPerSecond = 500)
     assert(stream.isStreaming)
     val q = stream.writeStream.format("memory").queryName("synth")
