@@ -132,14 +132,12 @@ object HybridSearch {
     // bm25TopK's eager corpus barriers — independent work, overlapped
     // (§2.6) so the fits back-fill the corpus stages' tails; the fused
     // plan (and the ranking) is unchanged
-    val denseFut = scala.concurrent.Future(
+    val (lex, dense) = Par.overlap(
+      lexShortlist(docs, queryTerms, perList),
       Pq.ivfPqTopKRerank(
         embeddings, embeddings.filter(col("vec_id") === queryVecId),
         k = perList, shortlist = shortlist, nprobe = nprobe)
-        .select(col("neighbor_id").as("id"), col("rank")))(Par.overlapEc)
-    val lex = lexShortlist(docs, queryTerms, perList)
-    val dense = scala.concurrent.Await.result(
-      denseFut, scala.concurrent.duration.Duration.Inf)
+        .select(col("neighbor_id").as("id"), col("rank")))
     rrfFuse(lex, dense, k, rrfK)
   }
 
@@ -165,10 +163,10 @@ object HybridSearch {
     // the three approximate tiers' constructions run their own
     // driver-side fits (PQ codebook collects) — independent of each other
     // and of the exact-fusion truth set, given the checkpointed `lex` —
-    // so they build concurrently while THIS thread materializes the truth
-    // checkpoint (§2.6 overlap; the assembled plan, and the result, are
-    // unchanged)
-    val tierFuts = Seq(
+    // so they build concurrently with the truth checkpoint (§2.6
+    // overlap; the assembled plan, and the result, are unchanged); every
+    // branch settles before any failure surfaces
+    val tierFns = Seq(
       "ivfpq_rerank" -> (() => rrfFuse(lex,
         denseIds(Pq.ivfPqTopKRerank(embeddings, qVec, k = perList,
           shortlist = 100)), k)),
@@ -178,12 +176,11 @@ object HybridSearch {
       "lsh_multiprobe" -> (() => rrfFuse(lex,
         denseIds(SimilaritySearch.lshMultiProbeTopK(
           embeddings, qVec, k = perList)), k))
-    ).map { case (tier, f) =>
-      tier -> scala.concurrent.Future(f())(Par.overlapEc)
-    }
-    val exactFused = rrfFuse(lex,
+    )
+    // the truth set, probed by every tier row
+    val exactFused +: tierFused = Par.joinAll((() => rrfFuse(lex,
       denseIds(SimilaritySearch.bruteForceTopK(embeddings, qVec, k = perList)), k)
-      .localCheckpoint() // the truth set, probed by every tier row
+      .localCheckpoint()) +: tierFns.map(_._2))
     val truth = exactFused.select(col("id"))
     def audit(tier: String, fused: DataFrame): DataFrame =
       fused.select(col("id"))
@@ -194,14 +191,9 @@ object HybridSearch {
         .select(
           lit(tier).as("tier"), col("returned"), col("hits"),
           round(col("hits").cast("double") / lit(k.toDouble), 6).as("recall"))
-    val tiers = tierFuts.map { case (tier, fut) =>
-      tier -> scala.util.Try(scala.concurrent.Await.result(
-        fut, scala.concurrent.duration.Duration.Inf))
-    }
-    tiers.collect { case (_, scala.util.Failure(e)) => throw e }
     audit("exact_brute", exactFused)
-      .unionAll(tiers.map { case (t, f) => audit(t, f.get) }
-        .reduce(_ unionAll _))
+      .unionAll(tierFns.map(_._1).zip(tierFused)
+        .map { case (t, f) => audit(t, f) }.reduce(_ unionAll _))
       .orderBy(col("tier"))
   }
 }

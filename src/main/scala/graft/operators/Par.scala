@@ -23,11 +23,13 @@ private[graft] object Par {
     * scheduler cannot overlap by itself because driver code runs them
     * sequentially (guide §2.6): per-tier index fits whose collect()s fire
     * at DataFrame construction, or a commit's writes to two independent
-    * tables. Unbounded cached threads — a caller that runs one branch on
-    * its own thread and the rest here can never deadlock on the pool —
-    * and daemon, so a crashed driver never hangs on pool shutdown.
+    * tables. Private: every overlap goes through [[joinAll]] or
+    * [[overlap]], so no branch can escape in flight. Unbounded cached
+    * threads — a branch that itself overlaps (a commit inside a fold)
+    * can never deadlock on the pool — and daemon, so a crashed driver
+    * never hangs on pool shutdown.
     */
-  lazy val overlapEc: scala.concurrent.ExecutionContext =
+  private lazy val overlapEc: scala.concurrent.ExecutionContext =
     scala.concurrent.ExecutionContext.fromExecutor(
       java.util.concurrent.Executors.newCachedThreadPool(r => {
         val t = new Thread(r, "graft-overlap")
@@ -38,7 +40,8 @@ private[graft] object Par {
   /** Run `fs` concurrently on [[overlapEc]] and return their results in
     * order; the calling thread blocks until EVERY branch settles (even
     * when one fails — an escaped in-flight branch could race whatever
-    * recovery the caller runs next), then [[throwFailures]] rethrows —
+    * recovery the caller runs next), then rethrows the first failure in
+    * argument order with every later one attached via `addSuppressed` —
     * the same fail-loud contract as running them sequentially, with no
     * later failure masked.
     */
@@ -47,20 +50,21 @@ private[graft] object Par {
     import scala.concurrent.duration.Duration
     val futs = fs.map(f => Future(f())(overlapEc))
     val settled = futs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    throwFailures(settled: _*)
-    settled.map(_.get)
-  }
-
-  /** Given branches that have ALL settled, rethrow the first failure in
-    * argument order with every later one attached via `addSuppressed`;
-    * return normally when none failed.
-    */
-  def throwFailures(settled: scala.util.Try[_]*): Unit = {
     val failures = settled.collect { case scala.util.Failure(e) => e }.distinct
     failures.headOption.foreach { first =>
       failures.tail.foreach(first.addSuppressed)
       throw first
     }
+    settled.map(_.get)
+  }
+
+  /** The two-branch [[joinAll]]: run `a` and `b` concurrently and return
+    * both results once BOTH settle; a failure surfaces only then, `a`'s
+    * first, with `b`'s attached via `addSuppressed`.
+    */
+  def overlap[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(ra, rb) = joinAll[Any](Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 
   def spread(df: DataFrame): DataFrame = {

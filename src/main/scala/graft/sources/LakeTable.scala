@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Cdc
+import graft.operators.{Cdc, Par}
+import graft.streaming.CommitFile
 
 /** A COMMITTED boxed z-order layout — [[LakeSink]]'s clustered parquet
   * plus a versioned manifest, the minimal transaction log that makes
@@ -39,13 +40,15 @@ import graft.operators.Cdc
   * cycle on the winner's state, so concurrent mutations both land):
   *   1. land new data files (`Append`, unique names — uncommitted files
   *      are invisible garbage, never read);
-  *   2. write the full next manifest to `_commits/.tmp-<uuid>`;
-  *   3. rename it to `_commits/v%09d.txt` — rename-without-overwrite is
-  *      the atomic commit point (posix / HDFS contract);
+  *   2. publish the next manifest as `_commits/v%09d.txt` through
+  *      [[graft.streaming.CommitFile.publish]] — its tmp-then-rename-
+  *      without-overwrite is the atomic commit point, and a lost rename
+  *      is a [[CommitConflictException]] that retries the cycle;
+  *   3. best-effort refresh the `_commits/_latest/` hint ([[latestVersion]]);
   *   4. replaced files stay ON DISK, invisible to readers — they back
   *      time travel ([[readAt]]) until [[vacuum]]'s retention window
   *      (newest `keepVersions` manifests) drops them.
-  * A crash anywhere before (3) leaves the previous version fully intact:
+  * A crash anywhere before (2)'s rename leaves the previous version fully intact:
   * readers never observe duplicates, partial rewrites, or missing rows.
   *
   * Scale shape: the manifest is files-count-sized metadata (the same
@@ -96,6 +99,20 @@ object LakeTable {
 
   private val MaxCommitRetries = 5
 
+  /** The optimistic-concurrency loop of every commit path: `attempt`
+    * resolves the latest state and publishes the next version; a lost
+    * rename ([[CommitConflictException]]) re-runs it on the winner's
+    * state, escaping after [[MaxCommitRetries]] consecutive losses.
+    */
+  private def retryOnConflict[T](attempt: => T): T = {
+    var lastConflict: CommitConflictException = null
+    (0 to MaxCommitRetries).foreach { _ =>
+      try return attempt
+      catch { case e: CommitConflictException => lastConflict = e }
+    }
+    throw lastConflict
+  }
+
   /** Create the table: one z-order-clustered OPTIMIZE write + manifest
     * v1. `cols` are the clustering (and box) columns — numeric, and the
     * first one should be the table's merge key for maintenance pruning
@@ -129,14 +146,9 @@ object LakeTable {
   /** Every committed version number, ascending. */
   def versions(spark: SparkSession, path: String): Seq[Int] = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(s"$path/_commits")
-    require(fs.exists(dir), s"LakeTable: no _commits at $path — not a committed table")
-    val vs = fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".txt") =>
-        n.stripPrefix("v").stripSuffix(".txt").toInt }
-      .sorted
-    require(vs.nonEmpty, s"LakeTable: empty _commits at $path")
+    val vs = CommitFile.list(fs, new Path(s"$path/_commits"), "v", ".txt")
+    require(vs.nonEmpty,
+      s"LakeTable: no committed version under $path/_commits — not a committed table")
     vs
   }
 
@@ -272,25 +284,22 @@ object LakeTable {
         // the hint VALUE lives in the hint file's NAME, under a swept
         // O(1) subdir: a new hint lands before older ones sweep, so a
         // reader in the swap window always sees at least one
-        val hd = new Path(s"$path/_commits/_latest")
-        if (!fs.exists(hd)) None
-        else fs.listStatus(hd).toSeq.map(_.getPath.getName).collect {
-          case n if n.startsWith("v") && n.endsWith(".txt") &&
-              n.stripPrefix("v").stripSuffix(".txt").forall(_.isDigit) =>
-            n.stripPrefix("v").stripSuffix(".txt").toInt
-        }.maxOption.filter(v0 => v0 >= 1 && fs.exists(commitFile(path, v0)))
+        CommitFile.list(fs, latestHintDir(path), "v", ".txt")
+          .lastOption.filter(v0 => v0 >= 1 && fs.exists(commitFile(path, v0)))
       } catch { case scala.util.control.NonFatal(_) => None }
     hinted match {
       case Some(v0) =>
         var v = v0
         while (fs.exists(commitFile(path, v + 1))) v += 1
         v
-      case None => versions(spark, path).max
+      case None => versions(spark, path).last
     }
   }
 
   private def commitFile(path: String, version: Int): Path =
     new Path(f"$path%s/_commits/v$version%09d.txt")
+
+  private def latestHintDir(path: String): Path = new Path(s"$path/_commits/_latest")
 
   /** Best-effort hint refresh after a commit rename: land
     * `_commits/_latest/v%09d.txt` (the value is the NAME — torn content
@@ -306,17 +315,12 @@ object LakeTable {
   private def writeLatestHint(
       fs: org.apache.hadoop.fs.FileSystem, path: String, version: Int): Unit =
     try {
-      val hd = new Path(s"$path/_commits/_latest")
+      val hd = latestHintDir(path)
+      def at(v: Int) = new Path(hd, f"v$v%09d.txt")
       fs.mkdirs(hd)
-      fs.create(new Path(hd, f"v$version%09d.txt"), true).close()
-      fs.listStatus(hd).toSeq.map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith("v") && n.endsWith(".txt") &&
-            n.stripPrefix("v").stripSuffix(".txt").forall(_.isDigit) &&
-            n.stripPrefix("v").stripSuffix(".txt").toInt < version
-        }
-        .foreach(fs.delete(_, false))
+      CommitFile.touch(fs, at(version))
+      CommitFile.list(fs, hd, "v", ".txt").filter(_ < version)
+        .foreach(v => fs.delete(at(v), false))
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Every manifest, ascending — the table's audit trail. Resolved in
@@ -576,14 +580,8 @@ object LakeTable {
     */
   def compact(
       spark: SparkSession, path: String, cols: Seq[String],
-      targetFileBytes: Long, bits: Int = 16): ApplyStats = {
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
-      try return compactOnce(spark, path, cols, targetFileBytes, bits)
-      catch { case e: CommitConflictException => lastConflict = e }
-    }
-    throw lastConflict
-  }
+      targetFileBytes: Long, bits: Int = 16): ApplyStats =
+    retryOnConflict(compactOnce(spark, path, cols, targetFileBytes, bits))
 
   /** True iff [[compact]] would do work: at least two live files are
     * under the half-target selection bound — the cheap trigger a
@@ -776,12 +774,7 @@ object LakeTable {
     */
   def cursor(spark: SparkSession, cursorDir: String): Option[Int] = {
     val fs = new Path(cursorDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dir = new Path(cursorDir)
-    if (!fs.exists(dir)) return None
-    val vs = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("cursor-v") && n.endsWith(".txt") =>
-        n.stripPrefix("cursor-v").stripSuffix(".txt").toInt }
-    if (vs.isEmpty) None else Some(vs.max)
+    CommitFile.list(fs, new Path(cursorDir), "cursor-v", ".txt").lastOption
   }
 
   /** The changes a durable SUBSCRIBER has not yet processed: the net
@@ -832,7 +825,7 @@ object LakeTable {
 
   /** Advance a subscriber's cursor to `version`. Crash-safe WITHOUT an
     * overwriting rename: the position lives in the FILENAME
-    * (`cursor-v%09d.txt`, landed by rename-without-overwrite), the
+    * (`cursor-v%09d.txt`, a [[graft.streaming.CommitFile.publish]]), the
     * reader takes the max, and older markers are best-effort garbage —
     * a crash at any point leaves either the old max or both, never no
     * cursor (losing the cursor would silently re-deliver the whole
@@ -840,25 +833,16 @@ object LakeTable {
     */
   def commitCursor(spark: SparkSession, cursorDir: String, version: Int): Unit = {
     val fs = new Path(cursorDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(cursorDir))
-    val tmp = new Path(s"$cursorDir/.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(version.toString.getBytes("UTF-8")) finally out.close()
-    val dest = new Path(f"$cursorDir%s/cursor-v$version%09d.txt")
-    if (!fs.rename(tmp, dest)) {
+    val dir = new Path(cursorDir)
+    def at(v: Int) = f"cursor-v$v%09d.txt"
+    fs.mkdirs(dir)
+    if (!CommitFile.publish(fs, dir, at(version), version.toString.getBytes("UTF-8")))
       // another commit of the same position won the race: equally done
-      fs.delete(tmp, false)
-      require(fs.exists(dest),
+      require(fs.exists(new Path(dir, at(version))),
         s"LakeTable.commitCursor: rename lost at $cursorDir")
-    }
     // sweep superseded markers; failures here are harmless (max wins)
-    fs.listStatus(new Path(cursorDir)).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.startsWith("cursor-v") && n.endsWith(".txt") &&
-          n.stripPrefix("cursor-v").stripSuffix(".txt").toInt < version
-      }
-      .foreach(fs.delete(_, false))
+    CommitFile.list(fs, dir, "cursor-v", ".txt").filter(_ < version)
+      .foreach(v => fs.delete(new Path(dir, at(v)), false))
   }
 
   /** One at-least-once subscriber POLL — the library form of the consumer
@@ -934,24 +918,15 @@ object LakeTable {
       .filter(f =>
         fs.getFileStatus(new Path(s"$path/$f")).getModificationTime <= cutoff)
     stale.foreach(f => fs.delete(new Path(s"$path/$f"), false))
-    val tmp = fs.listStatus(new Path(s"$path/_commits")).toSeq
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith(".tmp-") &&
-        fs.getFileStatus(p).getModificationTime <= cutoff)
-    tmp.foreach(fs.delete(_, false))
+    val tmp = CommitFile.sweep(fs, new Path(s"$path/_commits"), graceMs)
     // crashed sidecar writers leave .tmp-<uuid> DIRS under _deletes
-    val dvTmp =
-      if (!fs.exists(dvDir)) Seq.empty[Path]
-      else fs.listStatus(dvDir).toSeq.map(_.getPath)
-        .filter(p => p.getName.startsWith(".tmp-") &&
-          fs.getFileStatus(p).getModificationTime <= cutoff)
-    dvTmp.foreach(fs.delete(_, true))
+    val dvTmp = CommitFile.sweep(fs, dvDir, graceMs)
     // crashed mutations leave hidden .stage-<uuid> DIRS at the table root
     val stageTmp = fs.listStatus(new Path(path)).toSeq.map(_.getPath)
       .filter(p => p.getName.startsWith(".stage-") &&
         fs.getFileStatus(p).getModificationTime <= cutoff)
     stageTmp.foreach(fs.delete(_, true))
-    stale.size + tmp.size + dvTmp.size + stageTmp.size
+    stale.size + tmp + dvTmp + stageTmp.size
   }
 
   /** Prune the MANIFEST log itself — the opt-in companion of [[vacuum]]
@@ -1008,9 +983,8 @@ object LakeTable {
     * retention window (fails loud otherwise, like any stale read).
     */
   private[graft] def restoreTo(
-      spark: SparkSession, path: String, toVersion: Int): Commit = {
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
+      spark: SparkSession, path: String, toVersion: Int): Commit =
+    retryOnConflict {
       val cur = latest(spark, path)
       if (cur.version == toVersion) return cur
       require(cur.version > toVersion,
@@ -1022,14 +996,10 @@ object LakeTable {
       require(missing.isEmpty,
         s"LakeTable.restoreTo: version $toVersion references vacuumed files " +
           s"(e.g. ${missing.take(3).mkString(", ")}) — outside the retention window")
-      try {
-        return writeCommit(spark, path, cur.version + 1, c.files, c.boxes,
-          c.schemaDdl, c.appliedBatches, c.deletes, c.rowCounts,
-          prev = Some(cur), sizes = c.sizes)
-      } catch { case e: CommitConflictException => lastConflict = e }
+      writeCommit(spark, path, cur.version + 1, c.files, c.boxes,
+        c.schemaDdl, c.appliedBatches, c.deletes, c.rowCounts,
+        prev = Some(cur), sizes = c.sizes)
     }
-    throw lastConflict
-  }
 
   /** Read a subset of a commit's data files with that commit's DELETION
     * VECTORS applied — the one read primitive every snapshot/changefeed/
@@ -1109,9 +1079,8 @@ object LakeTable {
     */
   private def applyTombstonesDvWith(
       spark: SparkSession, path: String, keysOf: Commit => DataFrame,
-      keyCol: String, marker: Option[String]): DvStats = {
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
+      keyCol: String, marker: Option[String]): DvStats =
+    retryOnConflict {
       val c = latest(spark, path)
       if (marker.exists(batchApplied(c, _)))
         return DvStats(c.version, 0, 0L)
@@ -1121,21 +1090,14 @@ object LakeTable {
       if (keys.isEmpty) return DvStats(c.version, 0, 0L)
       val shadowed = shadowedFiles(spark, c, keys, keyCol)
       if (shadowed.isEmpty) return DvStats(c.version, 0, 0L)
+      // on a lost race the sidecar is uncommitted garbage for vacuum
       val (dvRel, nKeys) = landSidecar(spark, path, keys)
-      try {
-        writeCommit(spark, path, c.version + 1, c.files, c.boxes,
-          c.schemaDdl, marker.foldLeft(c.appliedBatches)(addMarker),
-          c.deletes ++ shadowed.map(f => (f, dvRel)),
-          rowCounts = c.rowCounts, prev = Some(c), sizes = c.sizes)
-        return DvStats(c.version + 1, shadowed.size, nKeys)
-      } catch {
-        case e: CommitConflictException =>
-          // the sidecar is uncommitted garbage for vacuum; retry whole cycle
-          lastConflict = e
-      }
+      writeCommit(spark, path, c.version + 1, c.files, c.boxes,
+        c.schemaDdl, marker.foldLeft(c.appliedBatches)(addMarker),
+        c.deletes ++ shadowed.map(f => (f, dvRel)),
+        rowCounts = c.rowCounts, prev = Some(c), sizes = c.sizes)
+      DvStats(c.version + 1, shadowed.size, nKeys)
     }
-    throw lastConflict
-  }
 
   /** `count(*)` without opening data files — the metadata-only query
     * every lake format serves from its manifest. Each commit records
@@ -1208,60 +1170,12 @@ object LakeTable {
       cols: Seq[String], keyCol: String = "key", nFilesNew: Int = 2,
       bits: Int = 16, batchId: Option[Long] = None,
       arm: String = "cdc-mor"): DvStats = {
-    import spark.implicits._
     // materialized once — same rationale as applyChangelog's barrier (here
     // the probe keys, the sidecar land and the image land all re-derive it)
     val reduced = Cdc.compactChangelogFull(changelog).localCheckpoint()
-    val marker = batchId.map(b => s"$arm#$b")
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
-      val c = latest(spark, path)
-      if (marker.exists(batchApplied(c, _)))
-        return DvStats(c.version, 0, 0L)
-      val keys = reduced.select(col("key").as(keyCol)).distinct()
-      val shadowed = shadowedFiles(spark, c, keys, keyCol)
-      val images = reduced.filter(col("op") === "U")
-        .select(col("key"), col("name"), col("val"))
-      if (shadowed.isEmpty && images.isEmpty)
-        return DvStats(c.version, 0, 0L)
-      // the sidecar and the fresh image files are independent lands (both
-      // uncommitted = invisible; the sidecar attaches to PRE-COMMIT files
-      // only, never the fresh ones) — overlapped (§2.6), both settled
-      // before the attempt proceeds or unwinds
-      val dvFut: Option[scala.concurrent.Future[(String, Long)]] =
-        if (shadowed.isEmpty) None
-        else Some(scala.concurrent.Future(landSidecar(spark, path, keys))(
-          graft.operators.Par.overlapEc))
-      val landedTry = scala.util.Try(
-        landZOrdered(spark, path, images, cols, nFilesNew, bits))
-      val dvTry = dvFut.map(f => scala.util.Try(scala.concurrent.Await
-        .result(f, scala.concurrent.duration.Duration.Inf)))
-      val landed = landedTry.get
-      val fresh = landed.map(_.path)
-      val freshBoxes = landedBoxes(path, landed)
-      val (dvAttach, nKeys) = dvTry match {
-        case None => (Seq.empty[(String, String)], 0L)
-        case Some(t) =>
-          val (dvRel, n) = t.get
-          (shadowed.map(f => (f, dvRel)), n)
-      }
-      try {
-        writeCommit(spark, path, c.version + 1,
-          c.files ++ fresh.map(rel(path, _)),
-          c.boxes ++ freshBoxes,
-          unionDdl(c.schemaDdl, images.schema),
-          marker.foldLeft(c.appliedBatches)(addMarker),
-          c.deletes ++ dvAttach,
-          rowCounts = c.rowCounts ++ landed
-            .map(l => (rel(path, l.path), l.rows)),
-          prev = Some(c),
-          sizes = c.sizes ++ landed.map(l => (rel(path, l.path), l.bytes)))
-        return DvStats(c.version + 1, shadowed.size, nKeys)
-      } catch {
-        case e: CommitConflictException => lastConflict = e
-      }
-    }
-    throw lastConflict
+    replaceKeyedMor(spark, path, reduced.select(col("key").as(keyCol)),
+      reduced.filter(col("op") === "U").select(col("key"), col("name"), col("val")),
+      cols, keyCol, nFilesNew, bits, batchId, arm)
   }
 
   /** Keyed REPLACE, merge-on-read — the generic storage primitive under
@@ -1288,8 +1202,7 @@ object LakeTable {
       touchedHint: Option[(Int, Seq[String])] = None,
       keysDistinct: Boolean = false): DvStats = {
     val marker = batchId.map(b => s"$arm#$b")
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
+    retryOnConflict {
       val c = latest(spark, path)
       if (marker.exists(batchApplied(c, _)))
         return DvStats(c.version, 0, 0L)
@@ -1309,42 +1222,27 @@ object LakeTable {
       // never from the fresh files) — overlap them (§2.6) instead of
       // serializing sidecar-after-files; both must settle before the
       // attempt proceeds or unwinds
-      val dvFut: Option[scala.concurrent.Future[(String, Long)]] =
-        if (shadowed.isEmpty) None
-        else Some(scala.concurrent.Future(landSidecar(spark, path, ks))(
-          graft.operators.Par.overlapEc))
-      val landedTry = scala.util.Try(
-        landZOrdered(spark, path, rows, cols, nFilesNew, bits))
-      val dvTry = dvFut.map(f => scala.util.Try(scala.concurrent.Await
-        .result(f, scala.concurrent.duration.Duration.Inf)))
-      val landed = landedTry.get
+      val (landed, dv) = Par.overlap(
+        landZOrdered(spark, path, rows, cols, nFilesNew, bits),
+        if (shadowed.isEmpty) None else Some(landSidecar(spark, path, ks)))
       if (shadowed.isEmpty && landed.isEmpty)
         return DvStats(c.version, 0, 0L)
       val fresh = landed.map(_.path)
       val freshBoxes = landedBoxes(path, landed)
-      val (dvAttach, nKeys) = dvTry match {
-        case None => (Seq.empty[(String, String)], 0L)
-        case Some(t) =>
-          val (dvRel, n) = t.get
-          (shadowed.map(f => (f, dvRel)), n)
-      }
-      try {
-        writeCommit(spark, path, c.version + 1,
-          c.files ++ fresh.map(rel(path, _)),
-          c.boxes ++ freshBoxes,
-          unionDdl(c.schemaDdl, rows.schema),
-          marker.foldLeft(c.appliedBatches)(addMarker),
-          c.deletes ++ dvAttach,
-          rowCounts = c.rowCounts ++ landed
-            .map(l => (rel(path, l.path), l.rows)),
-          prev = Some(c),
-          sizes = c.sizes ++ landed.map(l => (rel(path, l.path), l.bytes)))
-        return DvStats(c.version + 1, shadowed.size, nKeys)
-      } catch {
-        case e: CommitConflictException => lastConflict = e
-      }
+      val (dvAttach, nKeys) = dv.fold((Seq.empty[(String, String)], 0L)) {
+        case (dvRel, n) => (shadowed.map(f => (f, dvRel)), n) }
+      writeCommit(spark, path, c.version + 1,
+        c.files ++ fresh.map(rel(path, _)),
+        c.boxes ++ freshBoxes,
+        unionDdl(c.schemaDdl, rows.schema),
+        marker.foldLeft(c.appliedBatches)(addMarker),
+        c.deletes ++ dvAttach,
+        rowCounts = c.rowCounts ++ landed
+          .map(l => (rel(path, l.path), l.rows)),
+        prev = Some(c),
+        sizes = c.sizes ++ landed.map(l => (rel(path, l.path), l.bytes)))
+      DvStats(c.version + 1, shadowed.size, nKeys)
     }
-    throw lastConflict
   }
 
   /** SQL `DELETE FROM t WHERE <condition>` on the committed layout —
@@ -1391,15 +1289,9 @@ object LakeTable {
   def materializeDeletes(
       spark: SparkSession, path: String, cols: Seq[String],
       nFilesNew: Int = 2, bits: Int = 16,
-      targetFileBytes: Option[Long] = None): ApplyStats = {
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
-      try return materializeOnce(
-        spark, path, cols, nFilesNew, bits, targetFileBytes)
-      catch { case e: CommitConflictException => lastConflict = e }
-    }
-    throw lastConflict
-  }
+      targetFileBytes: Option[Long] = None): ApplyStats =
+    retryOnConflict(materializeOnce(
+      spark, path, cols, nFilesNew, bits, targetFileBytes))
 
   private def materializeOnce(
       spark: SparkSession, path: String, cols: Seq[String],
@@ -1644,16 +1536,10 @@ object LakeTable {
       touchKeys: DataFrame, rewrite: DataFrame => DataFrame,
       appliedBatch: Option[String] = None,
       appendOnly: Boolean = false,
-      touchedHint: Option[(Int, Seq[String])] = None): ApplyStats = {
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
-      try return mutateOnce(
-        spark, path, cols, keyCol, nFilesNew, bits, touchKeys, rewrite,
-        appliedBatch, appendOnly, touchedHint)
-      catch { case e: CommitConflictException => lastConflict = e }
-    }
-    throw lastConflict
-  }
+      touchedHint: Option[(Int, Seq[String])] = None): ApplyStats =
+    retryOnConflict(mutateOnce(
+      spark, path, cols, keyCol, nFilesNew, bits, touchKeys, rewrite,
+      appliedBatch, appendOnly, touchedHint))
 
   private def mutateOnce(
       spark: SparkSession, path: String, cols: Seq[String], keyCol: String,
@@ -1737,16 +1623,11 @@ object LakeTable {
     */
   private def mutateAll(
       spark: SparkSession, path: String, cols: Seq[String], nFiles: Int,
-      bits: Int): ApplyStats = {
-    var lastConflict: CommitConflictException = null
-    (0 to MaxCommitRetries).foreach { _ =>
+      bits: Int): ApplyStats =
+    retryOnConflict {
       val c = latest(spark, path)
-      val rows = readLive(spark, path)
-      try return mutateAllOnce(spark, path, cols, nFiles, bits, c, rows)
-      catch { case e: CommitConflictException => lastConflict = e }
+      mutateAllOnce(spark, path, cols, nFiles, bits, c, readLive(spark, path))
     }
-    throw lastConflict
-  }
 
   private def mutateAllOnce(
       spark: SparkSession, path: String, cols: Seq[String], nFiles: Int,
@@ -1773,8 +1654,9 @@ object LakeTable {
     */
   private val CheckpointInterval = 10
 
-  /** Write manifest `version` via tmp + rename-without-overwrite — the
-    * atomic commit point. A lost race (version already exists) throws
+  /** Publish manifest `version` through
+    * [[graft.streaming.CommitFile.publish]] — the atomic commit point. A
+    * lost race (version already exists) throws
     * [[CommitConflictException]], which [[mutate]]/[[mutateAll]] catch
     * to retry the whole cycle on the winner's state — rename order IS
     * the serialization order.
@@ -1804,26 +1686,19 @@ object LakeTable {
       sizes: Map[String, Long],
       prev: Option[Commit] = None): Commit = {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$path/_commits"))
-    val tmp = new Path(s"$path/_commits/.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try {
-      val body = prev match {
-        case Some(p) if version % CheckpointInterval != 0 &&
-            p.version == version - 1 =>
-          deltaBody(p, files, boxes, schemaDdl, appliedBatches, deletes,
-            rowCounts, sizes)
-        case _ => fullBody(
-          files, boxes, schemaDdl, appliedBatches, deletes, rowCounts, sizes)
-      }
-      out.write(body.getBytes("UTF-8"))
-    } finally out.close()
-    val dest = new Path(f"$path/_commits/v$version%09d.txt")
-    if (!fs.rename(tmp, dest)) {
-      fs.delete(tmp, false)
+    val dir = new Path(s"$path/_commits")
+    fs.mkdirs(dir)
+    val body = prev match {
+      case Some(p) if version % CheckpointInterval != 0 &&
+          p.version == version - 1 =>
+        deltaBody(p, files, boxes, schemaDdl, appliedBatches, deletes,
+          rowCounts, sizes)
+      case _ => fullBody(
+        files, boxes, schemaDdl, appliedBatches, deletes, rowCounts, sizes)
+    }
+    if (!CommitFile.publish(fs, dir, f"v$version%09d.txt", body.getBytes("UTF-8")))
       throw new CommitConflictException(
         s"LakeTable: commit v$version lost the rename race at $path")
-    }
     writeLatestHint(fs, path, version)
     Commit(version, files, boxes, schemaDdl, appliedBatches, deletes,
       rowCounts, sizes)

@@ -70,7 +70,18 @@ final class Bm25Maintainer private (
   def foldedBatches: Set[Long] =
     highWaterOf(fs, workDir, currentVersion).toSet
 
-  private def currentVersion: Int = committedVersions(fs, workDir).max
+  /** The newest marked version. None listed means `stats/` was deleted
+    * out-of-band or the listing is inconsistent — refused loud, naming
+    * the directory, instead of serving or folding no stats.
+    */
+  private def currentVersion: Int = {
+    val vs = committedVersions(fs, workDir)
+    require(vs.nonEmpty,
+      s"Bm25Maintainer: $workDir/stats lists no marked version — deleted " +
+        "out-of-band or an inconsistent listing; refusing to serve or fold " +
+        "without committed stats")
+    vs.last
+  }
 
   /** Fold one micro-batch of new documents; returns false for an
     * already-folded (redelivered) batchId, true when a new version
@@ -155,18 +166,21 @@ object Bm25Maintainer {
 
   // underscore prefix: invisible to Spark's parquet file listing (the
   // _SUCCESS convention), so the marker can live INSIDE the version dir
+  private val MarkerName = "_folded.txt"
+
   private def markerPath(workDir: String, v: Int): Path =
-    new Path(s"${statsPath(workDir, v)}/_folded.txt")
+    new Path(statsPath(workDir, v), MarkerName)
+
+  /** Committed iff marked ([[CommitFile.marked]]): the version dirs, and
+    * the unmarked ones a fold or build crashed in before its marker.
+    */
+  private def listVersions(
+      fs: org.apache.hadoop.fs.FileSystem, workDir: String): (Seq[Int], Seq[Int]) =
+    CommitFile.marked(fs, new Path(s"$workDir/stats"), "v", MarkerName)
 
   private def committedVersions(
-      fs: org.apache.hadoop.fs.FileSystem, workDir: String): Seq[Int] = {
-    val dir = new Path(s"$workDir/stats")
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") => n.stripPrefix("v").toInt }
-      .filter(v => fs.exists(markerPath(workDir, v)))
-  }
+      fs: org.apache.hadoop.fs.FileSystem, workDir: String): Seq[Int] =
+    listVersions(fs, workDir)._1
 
   /** Delete UNMARKED version directories above the committed maximum —
     * debris of folds (or builds) that crashed after the parquet write but
@@ -174,17 +188,9 @@ object Bm25Maintainer {
     * them keeps the next fold's write from colliding with the dead path.
     */
   private def clearUnmarked(
-      fs: org.apache.hadoop.fs.FileSystem, workDir: String, above: Int): Unit = {
-    val dir = new Path(s"$workDir/stats")
-    if (!fs.exists(dir)) return
-    fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter { p =>
-        p.getName.startsWith("v") &&
-          p.getName.stripPrefix("v").toIntOption.exists(_ > above) &&
-          !fs.exists(new Path(p, "_folded.txt"))
-      }
-      .foreach(fs.delete(_, true))
-  }
+      fs: org.apache.hadoop.fs.FileSystem, workDir: String, above: Int): Unit =
+    listVersions(fs, workDir)._2.filter(_ > above)
+      .foreach(v => fs.delete(new Path(statsPath(workDir, v)), true))
 
   /** The version's replay high-water: the marker's one line, or none.
     * A marker listing several ids is refused, naming the file.
@@ -204,20 +210,17 @@ object Bm25Maintainer {
     }
   }
 
-  /** Atomic: content to a tmp name, rename-without-overwrite — a crash
-    * mid-write leaves dot-prefixed garbage (invisible to parquet listing
-    * AND to the marker check), never a truncated `_folded.txt` whose
-    * partial content would mis-parse the high-water.
+  /** Atomic, through [[CommitFile.publish]] — a crash mid-write leaves
+    * dot-prefixed garbage (invisible to parquet listing AND to the marker
+    * check), never a truncated `_folded.txt` whose partial content would
+    * mis-parse the high-water. A lost rename fails loud: only a second
+    * live owner (fenced at its fold entry) could have marked this
+    * version.
     */
   private def commitMarker(
       fs: org.apache.hadoop.fs.FileSystem, workDir: String, v: Int,
-      hw: Option[Long]): Unit = {
-    val tmp = new Path(
-      s"${statsPath(workDir, v)}/.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(hw.mkString.getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, markerPath(workDir, v)),
+      hw: Option[Long]): Unit =
+    require(CommitFile.publish(fs, new Path(statsPath(workDir, v)), MarkerName,
+        hw.mkString.getBytes("UTF-8")),
       s"Bm25Maintainer: marker rename lost at ${statsPath(workDir, v)}")
-  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.BloomFilter
-import graft.operators.SimilaritySearch
+import graft.operators.{Par, SimilaritySearch}
 
 /** Continuously maintained kNN-graph artifact — the streaming arm of
   * [[SimilaritySearch.knnGraphIncrement]]: an always-on ingest stream
@@ -410,7 +410,7 @@ final class GraphMaintainer private (
     // frames) is localCheckpoint-materialized, so neither thread
     // re-derives it; applyFold's reranked graph frame itself is lazy and
     // evaluates once, on the graph-land thread alone
-    val ((rTok, rCells), (gTok, gCells)) = overlap(
+    val ((rTok, rCells), (gTok, gCells)) = Par.overlap(
       landCells(fs, workDir, routingDf, RoutingArt),
       landCells(fs, workDir, graphDf, GraphArt, preClustered = true))
     val upserts = (gCells.map(c => (GraphArt, c) -> gTok) ++
@@ -563,7 +563,7 @@ final class GraphMaintainer private (
     // cell-assign materialization — overlap them (§2.6); the token is not
     // needed until the commit below
     val bcast = spark.sparkContext.broadcast(cs)
-    val (qTok, cells) = overlap(
+    val (qTok, cells) = Par.overlap(
       landQuantizer(spark, workDir, cs),
       SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint())
     // same one-exchange edge path + overlapped artifact writes as build
@@ -574,7 +574,7 @@ final class GraphMaintainer private (
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k2)
       .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"), col("cell"))
-    val ((rTok, rCells), (gTok, gCells)) = overlap(
+    val ((rTok, rCells), (gTok, gCells)) = Par.overlap(
       landCells(fs, workDir, cells, RoutingArt),
       landCells(fs, workDir, edges, GraphArt, preClustered = true))
     val entries = (rCells.map(c => (RoutingArt, c) -> rTok) ++
@@ -695,12 +695,7 @@ final class GraphMaintainer private (
       fs.delete(new Path(s"$workDir/_commits/$n"), false)
       dropped += 1
     }
-    val cDir = new Path(s"$workDir/_commits")
-    if (fs.exists(cDir))
-      fs.listStatus(cDir).map(_.getPath)
-        .filter(p => p.getName.startsWith(".tmp-") &&
-          now - fs.getFileStatus(p).getModificationTime >= graceMs)
-        .foreach { p => fs.delete(p, false); dropped += 1 }
+    dropped += CommitFile.sweep(fs, new Path(s"$workDir/_commits"), graceMs)
     dropped + OwnerFence.gcSuperseded(fs, s"$workDir/owner")
   }
 
@@ -875,19 +870,6 @@ object GraphMaintainer {
     */
   private[graft] val CheckpointEvery = 10
 
-  /** Run two independent branches concurrently — a commit's
-    * two artifact lands, or a quantizer land beside the cell-assign
-    * materialization (guide-§2.6 back-fill: one branch's tasks fill the
-    * executor slots the other's tail leaves idle). Both settle before any
-    * failure surfaces, through [[graft.operators.Par.joinAll]]: a land
-    * escaping in flight past the error could leave an orphan quantizer
-    * or cell directory landing after the caller moved on.
-    */
-  private def overlap[A, B](a: => A, b: => B): (A, B) = {
-    val Seq(ra, rb) = graft.operators.Par.joinAll(Seq(() => a, () => b))
-    (ra.asInstanceOf[A], rb.asInstanceOf[B])
-  }
-
   /** Corpus-derived coarse-quantizer sizing for an unsized [[build]] on
     * a FRESH workDir: √n clamped to [16, 131072] — mean cell size √n
     * keeps both the per-query probe (nCentroids kernel dots) and the
@@ -957,12 +939,8 @@ object GraphMaintainer {
     * lexicographic order IS fencing order: everything a newer owner
     * publishes sorts above everything any superseded owner ever can.
     */
-  private[graft] def manifestNames(fs: FileSystem, workDir: String): Seq[String] = {
-    val p = new Path(s"$workDir/_commits")
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(ManifestRe.matches(_)).sorted
-  }
+  private[graft] def manifestNames(fs: FileSystem, workDir: String): Seq[String] =
+    CommitFile.names(fs, new Path(s"$workDir/_commits"), ManifestRe).sorted
 
   /** Parse one commit file: a `#graft-manifest v2 ckpt|delta` header
     * line, then `#` fields (`#q` and `#k` required), entry and removal
@@ -1072,7 +1050,7 @@ object GraphMaintainer {
     manifestNames(fs, workDir).lastOption
       .fold(Map.empty[(String, Long), String])(resolveState(fs, workDir, _).entries)
 
-  /** Publish a commit by rename-without-overwrite — THE commit point.
+  /** Publish a commit through [[CommitFile.publish]] — THE commit point.
     * The sequence number is monotone across epochs (max over every
     * committed name + 1), the epoch prefix puts every commit of a
     * superseded owner below the new owner's first, and a lost rename
@@ -1122,16 +1100,11 @@ object GraphMaintainer {
       entries.toSeq.sortBy { case ((a, c), _) => (a, c) }
         .map { case ((a, c), t) => s"$a\t$c\t$t" } ++
       removes.toSeq.sorted.map { case (a, c) => s"!$a\t$c" }).mkString("\n")
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(tmp, new Path(dir, name))) {
-      fs.delete(tmp, false)
+    if (!CommitFile.publish(fs, dir, name, body.getBytes("UTF-8")))
       throw new IllegalStateException(
         s"GraphMaintainer: manifest $name already exists — a concurrent " +
           "commit under the same owner epoch violates the single-owner " +
           "contract (OwnerFence.acquire hands out distinct epochs)")
-    }
     name
   }
 
@@ -1256,7 +1229,7 @@ object GraphMaintainer {
     }
     // quantizer land ∥ cell-assign materialization, as in rebuildEpoch
     val bcast = spark.sparkContext.broadcast(cs)
-    val (qTok, cells) = overlap(
+    val (qTok, cells) = Par.overlap(
       landQuantizer(spark, workDir, cs),
       SimilaritySearch.cellAssign(corpus, bcast).localCheckpoint())
     // one exchange for the whole edge path: hash on cell, window keyed
@@ -1271,7 +1244,7 @@ object GraphMaintainer {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("vec_id"), col("neighbor_id"), col("rank"), col("cos"), col("cell"))
-    val ((rTok, rCells), (gTok, gCells)) = overlap(
+    val ((rTok, rCells), (gTok, gCells)) = Par.overlap(
       landCells(fs, workDir, cells, RoutingArt),
       landCells(fs, workDir, edges, GraphArt, preClustered = true))
     val entries = (rCells.map(c => (RoutingArt, c) -> rTok) ++

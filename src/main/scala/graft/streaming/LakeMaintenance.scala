@@ -311,9 +311,9 @@ object LakeMaintenance {
     *     marker records the table version it reflects), pull
     *     `readChanges(reflected, current, withPreimage)` — one feed even
     *     across a multi-fold gap — and land the folded view as the next
-    *     version (parquet first, marker rename last: a markerless dir is
-    *     invisible garbage, so a crash mid-land leaves the old view
-    *     serving);
+    *     version (parquet first, then the marker through
+    *     [[CommitFile.publish]]: a markerless dir is invisible garbage, so
+    *     a crash mid-land leaves the old view serving);
     *   - a view already at the current table version is a no-op (replay
     *     safety), and re-running after any crash point converges.
     * Measure routing: an all-sum/count view folds the feed alone
@@ -361,10 +361,10 @@ object LakeMaintenance {
     // views are summary-sized; one file keeps the artifact cheap to open,
     // and guarantees an empty view still lands a schema-bearing file
     next.repartition(1).write.mode("overwrite").parquet(dest)
-    val tmp = new Path(s"$dest/.tmp-marker")
-    val out = fs.create(tmp, false)
-    try out.write(cur.toString.getBytes("UTF-8")) finally out.close()
-    require(fs.rename(tmp, new Path(s"$dest/_applied.txt")),
+    // a lost rename means a second refresher marked this version: the
+    // view loop is single-writer, so fail loud rather than guess
+    require(CommitFile.publish(fs, new Path(dest), ViewMarker,
+        cur.toString.getBytes("UTF-8")),
       s"refreshView: marker rename lost at $dest")
     // keep the just-superseded view for readers in flight; everything
     // older is garbage — without this the view directory grows one
@@ -386,27 +386,22 @@ object LakeMaintenance {
     spark.read.parquet(f"$viewDir%s/v${vs.last._1}%09d")
   }
 
+  private val ViewMarker = "_applied.txt"
+
   /** (view version, reflected table version) of every committed view
-    * version, ascending — a dir without its `_applied.txt` marker never
-    * lists (the land's commit point is the marker rename).
+    * version, ascending — committed iff marked ([[CommitFile.marked]]): a
+    * dir without its `_applied.txt` marker (a crashed land) never lists.
     */
   private def committedViews(
       spark: SparkSession, viewDir: String): Seq[(Int, Int)] = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(viewDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(viewDir))) Seq.empty
-    else fs.listStatus(new Path(viewDir)).toSeq
-      .map(_.getPath).filter(_.getName.startsWith("v"))
-      .flatMap { d =>
-        val marker = new Path(d, "_applied.txt")
-        if (!fs.exists(marker)) None // crashed land: invisible
-        else {
-          val in = fs.open(marker)
-          val tv = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .mkString.trim.toInt finally in.close()
-          Some(d.getName.stripPrefix("v").toInt -> tv)
-        }
-      }.sortBy(_._1)
+    CommitFile.marked(fs, new Path(viewDir), "v", ViewMarker)._1.map { v =>
+      val in = fs.open(new Path(f"$viewDir%s/v$v%09d/$ViewMarker"))
+      val tv = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .mkString.trim.toInt finally in.close()
+      v -> tv
+    }
   }
 }

@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 
 /** Single-writer FENCING for artifact maintainers — a monotone owner
-  * epoch on the artifact's own storage (`<dir>/e%06d.txt`, landed by
-  * rename-without-overwrite): construction ACQUIRES the next epoch, and
+  * epoch on the artifact's own storage (`<dir>/e%06d.txt`, published
+  * through [[CommitFile]]): construction ACQUIRES the next epoch, and
   * the maintainer re-checks `assertOwner` at every mutation entry (and,
   * where a marker rename is the commit point, immediately before it).
   * Recovery therefore TAKES OVER: a still-live prior maintainer on the
@@ -17,44 +17,33 @@ import org.apache.hadoop.fs.Path
   * holder's crash, and a TTL needs clock trust; the epoch needs neither —
   * ownership transfers the moment the new maintainer lands its file, and
   * the loser's next check (one listing of a GC-bounded directory) ends
-  * it. The residual check→commit window is backstopped by each
-  * maintainer's own atomic commit primitive (versioned rename), exactly
+  * it. The residual check→commit window is backstopped by the
+  * artifact's own commit (a [[CommitFile.publish]] of a versioned name
+  * that a racing writer loses), exactly
   * as Delta-style optimistic writers backstop theirs. This is the
   * standard fencing-token construction (ZooKeeper epochs, HDFS lease
   * recovery) on plain filesystem primitives.
   */
 private[streaming] object OwnerFence {
 
-  private def epochPath(dir: String, e: Int): Path =
-    new Path(f"$dir%s/e$e%06d.txt")
+  private def epochName(e: Int): String = f"e$e%06d.txt"
 
-  /** Every landed epoch, unsorted (the directory is GC-bounded). */
-  def epochs(fs: org.apache.hadoop.fs.FileSystem, dir: String): Seq[Int] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) return Nil
-    fs.listStatus(p).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("e") && n.endsWith(".txt") =>
-        n.stripPrefix("e").stripSuffix(".txt").toInt }
-  }
+  /** Every landed epoch, ascending (the directory is GC-bounded). */
+  def epochs(fs: org.apache.hadoop.fs.FileSystem, dir: String): Seq[Int] =
+    CommitFile.list(fs, new Path(dir), "e", ".txt")
 
-  /** Land the next owner epoch by rename-without-overwrite; a lost race
-    * (two recoveries at once) bumps and retries — both get DISTINCT
+  /** Land the next owner epoch through [[CommitFile.publish]]; a lost
+    * race (two recoveries at once) bumps and retries — both get DISTINCT
     * epochs, and whichever holds the max after the dust settles owns the
     * artifact (the other is fenced at its first mutation).
     */
   def acquire(fs: org.apache.hadoop.fs.FileSystem, dir: String): Int = {
     fs.mkdirs(new Path(dir))
-    var e = epochs(fs, dir).maxOption.getOrElse(0) + 1
-    while (true) {
-      val tmp = new Path(s"$dir/.tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, false)
-      try out.write(e.toString.getBytes("UTF-8")) finally out.close()
-      if (fs.rename(tmp, epochPath(dir, e))) return e
-      fs.delete(tmp, false)
-      e += 1
-    }
-    -1 // unreachable
+    var e = epochs(fs, dir).lastOption.getOrElse(0) + 1
+    while (!CommitFile.publish(
+        fs, new Path(dir), epochName(e), e.toString.getBytes("UTF-8")))
+      e += 1 // lost the rename: another acquire holds e — take the next
+    e
   }
 
   /** Fail loud if a newer epoch has landed since `epoch` was acquired —
@@ -88,16 +77,8 @@ private[streaming] object OwnerFence {
     */
   def gcSuperseded(
       fs: org.apache.hadoop.fs.FileSystem, dir: String): Int = {
-    val all = epochs(fs, dir)
-    val mx = all.maxOption.getOrElse(0)
-    val old = all.filter(_ < mx)
-    old.foreach(e => fs.delete(epochPath(dir, e), false))
-    val p = new Path(dir)
-    val tmps =
-      if (!fs.exists(p)) Seq.empty[Path]
-      else fs.listStatus(p).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith(".tmp-"))
-    tmps.foreach(fs.delete(_, false))
-    old.size + tmps.size
+    val old = epochs(fs, dir).dropRight(1)
+    old.foreach(e => fs.delete(new Path(dir, epochName(e)), false))
+    old.size + CommitFile.sweep(fs, new Path(dir), graceMs = 0L)
   }
 }

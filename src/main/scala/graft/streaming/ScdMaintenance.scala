@@ -142,7 +142,18 @@ final class ScdMaintainer private (
     armHighWater(markerOf(fs, workDir, currentVersion).folded, "forget")
       .map(Set(_)).getOrElse(Set.empty)
 
-  private def currentVersion: Int = committedVersions(fs, workDir).max
+  /** The newest pair marker. None listed means `fold/` was deleted
+    * out-of-band or the listing is inconsistent — refused loud, naming the
+    * directory, instead of serving or folding an uncommitted cut.
+    */
+  private def currentVersion: Int = {
+    val vs = committedVersions(fs, workDir)
+    require(vs.nonEmpty,
+      s"ScdMaintainer: $workDir/fold lists no pair marker — deleted " +
+        "out-of-band or an inconsistent listing; refusing to read or fold " +
+        "without a committed cross-table cut")
+    vs.last
+  }
 
   /** Fail loud if another maintainer has taken ownership of `workDir`
     * since this one was constructed — see the class doc's fencing
@@ -252,12 +263,6 @@ final class ScdMaintainer private (
     //    exactly as before — a crash between the two is healed on entry
     //    regardless of which landed first.
     //
-    // 1. closed intervals append immutably (empty appends still commit,
-    //    carrying the replay marker)
-    val closedFut = scala.concurrent.Future(LakeTable.append(
-      newClosed, closedTablePath, Seq("key", "valid_from"),
-      nFilesNew = 1, batchId = batchId, arm = "scd-closed"))(
-      graft.operators.Par.overlapEc)
     // 2. the current slice: rewrite its touched files (merge-on-write)
     //    while they are small; once the touched footprint outgrows the
     //    threshold, commit merge-on-read instead — O(batch) landed bytes
@@ -268,11 +273,11 @@ final class ScdMaintainer private (
     // cCur — hand them down version-pinned so the commit path does not
     // re-run the same box probe (it recomputes on any version mismatch)
     val hint = Some((cCur.version, touchedFiles))
-    // the current commit runs on THIS thread while the closed append is
-    // in flight; whatever happens, the fold never unwinds before the
-    // closed append settles — an escaped in-flight commit would race the
-    // next fold's heal-on-entry rollback
-    val kvTry = scala.util.Try {
+    // whatever happens, the fold never unwinds before BOTH commits settle
+    // — an escaped in-flight commit would race the next fold's
+    // heal-on-entry rollback; a current-commit failure surfaces first,
+    // the closed append's attached
+    val (kv0, closedStats) = graft.operators.Par.overlap(
       if (useMor)
         LakeTable.replaceKeyedMor(
           spark, currentTablePath, touched, newCur, Seq("key"),
@@ -290,13 +295,13 @@ final class ScdMaintainer private (
             base.join(broadcast(touched), Seq("key"), "left_anti")
               .unionByName(newCur),
           appliedBatch = batchId.map(b => s"scd-current#$b"),
-          touchedHint = hint).version
-    }
-    val closedTry = scala.util.Try(scala.concurrent.Await.result(
-      closedFut, scala.concurrent.duration.Duration.Inf))
-    graft.operators.Par.throwFailures(kvTry, closedTry)
-    var kv = kvTry.get
-    val closedStats = closedTry.get
+          touchedHint = hint).version,
+      // 1. closed intervals append immutably (empty appends still commit,
+      //    carrying the replay marker)
+      LakeTable.append(
+        newClosed, closedTablePath, Seq("key", "valid_from"),
+        nFilesNew = 1, batchId = batchId, arm = "scd-closed"))
+    var kv = kv0
     // 3. bounded read amplification: MoR folds accumulate deletion
     //    vectors — with the fraction set, fold them back in once that
     //    share of the files is shadowed (manifest arithmetic via
@@ -463,20 +468,16 @@ final class ScdMaintainer private (
       LakeTable.latestVersion(spark, currentTablePath) - m.currentV + 1)
     val nData = LakeTable.vacuum(spark, closedTablePath, keepClosed, graceMs) +
       LakeTable.vacuum(spark, currentTablePath, keepCurrent, graceMs)
-    val cutoff = System.currentTimeMillis() - graceMs
     // pair markers beyond the retention window (never the newest) —
     // listed once, deleted from that list (an honest count, no re-list)
     val oldMarkers = committedVersions(fs, workDir)
       .filter(_ <= vCur - math.max(1, keepVersions))
     oldMarkers.foreach(v => fs.delete(markerPath(workDir, v), false))
     // crashed commitMarker attempts leave .tmp-<uuid> files
-    val tmp = fs.listStatus(new Path(s"$workDir/fold")).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith(".tmp-") &&
-        fs.getFileStatus(p).getModificationTime <= cutoff)
-    tmp.foreach(fs.delete(_, false))
+    val tmp = CommitFile.sweep(fs, new Path(s"$workDir/fold"), graceMs)
     // superseded owner epochs: only the max carries fencing authority
     val nEpochs = OwnerFence.gcSuperseded(fs, s"$workDir/owner")
-    nData + oldMarkers.size + tmp.size + nEpochs
+    nData + oldMarkers.size + tmp + nEpochs
   }
 }
 
@@ -574,14 +575,8 @@ object ScdMaintainer {
     new Path(f"$workDir%s/fold/v$v%06d.txt")
 
   private def committedVersions(
-      fs: org.apache.hadoop.fs.FileSystem, workDir: String): Seq[Int] = {
-    val dir = new Path(s"$workDir/fold")
-    if (!fs.exists(dir)) return Nil
-    fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v") && n.endsWith(".txt") =>
-        n.stripPrefix("v").stripSuffix(".txt").toInt }
-  }
+      fs: org.apache.hadoop.fs.FileSystem, workDir: String): Seq[Int] =
+    CommitFile.list(fs, new Path(s"$workDir/fold"), "v", ".txt")
 
   private def acquireEpoch(
       fs: org.apache.hadoop.fs.FileSystem, workDir: String): Int =
@@ -623,22 +618,21 @@ object ScdMaintainer {
     Marker(lines(0).toInt, lines(1).toInt, folded)
   }
 
-  /** Atomic marker publication: full content to a tmp name, then
-    * rename-without-overwrite — a crash mid-write leaves tmp garbage,
-    * never a truncated marker at the committed name (which would wedge
-    * every later read on a parse error).
+  /** Atomic marker publication through [[CommitFile.publish]] — a crash
+    * mid-write leaves tmp garbage, never a truncated marker at the
+    * committed name (which would wedge every later read on a parse
+    * error). A lost rename fails loud: the fence check right before it
+    * leaves only a takeover racing the rename itself, and the new owner's
+    * marker must win.
     */
   private def commitMarker(
       fs: org.apache.hadoop.fs.FileSystem, workDir: String, v: Int,
       m: Marker): Unit = {
-    fs.mkdirs(new Path(s"$workDir/fold"))
-    val tmp = new Path(s"$workDir/fold/.tmp-${java.util.UUID.randomUUID()}")
-    val out = fs.create(tmp, false)
-    try out.write(
-      (Seq(m.closedV.toString, m.currentV.toString) ++
-        m.folded.toSeq.sorted).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, markerPath(workDir, v)),
+    val dir = new Path(s"$workDir/fold")
+    fs.mkdirs(dir)
+    require(CommitFile.publish(fs, dir, markerPath(workDir, v).getName,
+        (Seq(m.closedV.toString, m.currentV.toString) ++
+          m.folded.toSeq.sorted).mkString("\n").getBytes("UTF-8")),
       s"ScdMaintainer: marker rename lost at $workDir fold v$v")
   }
 }

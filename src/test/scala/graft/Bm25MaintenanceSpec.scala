@@ -60,6 +60,22 @@ class Bm25MaintenanceSpec extends SparkSpec {
     assert(e.getMessage.contains("FENCED"), e.getMessage)
   }
 
+  test("an out-of-band-deleted stats directory is refused loud, naming it") {
+    val dir = tmp("nostats")
+    val m = Bm25Maintainer.build(docs.filter(col("doc_id") % 5 === 0), dir)
+    def rmAll(p: java.io.File): Unit = {
+      Option(p.listFiles()).foreach(_.foreach(rmAll)); p.delete(); ()
+    }
+    rmAll(new java.io.File(s"$dir/stats"))
+    Seq[() => Any](() => m.foldedBatches, () => m.stats,
+        () => m.fold(docs.filter(col("doc_id") % 5 === 1), Some(0L)))
+      .foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"$dir/stats") &&
+          e.getMessage.contains("no marked version"), s"got: ${e.getMessage}")
+      }
+  }
+
   test("a markerless (crash-interrupted) version directory is ignored AND does not block later folds") {
     val dir = tmp("marker")
     val m = Bm25Maintainer.build(docs.filter(col("doc_id") % 2 === 0), dir)

@@ -5,6 +5,34 @@ import org.apache.spark.sql.functions._
 import graft.operators.Cdc
 import graft.sources.LakeTable
 
+/** A local filesystem under the `faultymor:` scheme that, while armed,
+  * fails every directory or file creation inside either merge-on-read
+  * land: the fresh-file stage (`.stage-`) and the sidecar's tmp dir
+  * (`_deletes/.tmp-`) — the `faulty:` pattern of ScdMaintenanceSpec.
+  */
+class FaultyMorLandFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+  override def getUri: java.net.URI = java.net.URI.create("faultymor:///")
+  override def getScheme: String = "faultymor"
+  private def check(p: Path): Unit =
+    if (FaultyMorLandFileSystem.armed &&
+        (p.toString.contains("/.stage-") || p.toString.contains("/_deletes/.tmp-")))
+      throw new java.io.IOException(s"injected land failure at $p")
+  override def mkdirs(p: Path): Boolean = { check(p); super.mkdirs(p) }
+  override def mkdirs(p: Path, permission: FsPermission): Boolean = { check(p); super.mkdirs(p, permission) }
+  override def create(
+      p: Path, overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    check(p)
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object FaultyMorLandFileSystem {
+  @volatile var armed = false
+}
+
 class LakeTableSpec extends SparkSpec {
   import spark.implicits._
 
@@ -753,6 +781,34 @@ class LakeTableSpec extends SparkSpec {
     val replay2 = LakeTable.applyChangelogFullMor(
       spark, dir, log2, Seq("key"), batchId = Some(3L))
     assert(replay2.version == replay.version && replay2.filesShadowed == 0)
+  }
+
+  test("a merge-on-read apply whose two lands both fail reports both, then applies cleanly") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.faultymor.impl", classOf[FaultyMorLandFileSystem].getName)
+    val dir = s"faultymor://${Files.createTempDirectory("graft-lakemorfail")}/t"
+    val base = (0L until 800L).map(k => (k, s"name_$k", k * 1.5))
+      .toDF("key", "name", "val")
+    LakeTable.init(base, dir, Seq("key"), nFiles = 8)
+    // key 5 shadows its span file (sidecar land) and carries an image
+    // (fresh-file land): both lands run, and both fail
+    val log = Seq((5L, 101L, "U", "up5", 50.0), (7L, 102L, "D", null, 0.0))
+      .toDF("key", "seq", "op", "name", "val")
+    FaultyMorLandFileSystem.armed = true
+    val e = try intercept[Exception](
+        LakeTable.applyChangelogFullMor(spark, dir, log, Seq("key")))
+      finally FaultyMorLandFileSystem.armed = false
+    def mentions(t: Throwable, what: String): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .exists(x => Option(x.getMessage).exists(_.contains(what)))
+    assert(mentions(e, "/.stage-"), "the fresh-file land's failure surfaces")
+    assert(e.getSuppressed.exists(mentions(_, "/_deletes/.tmp-")),
+      "the sidecar land's failure is attached, not dropped")
+    assert(LakeTable.latest(spark, dir).version == 1, "nothing committed")
+    assert(LakeTable.applyChangelogFullMor(spark, dir, log, Seq("key")).version == 2)
+    assert(LakeTable.readLive(spark, dir).orderBy(col("key")).collect().map(_.toSeq).toSeq ==
+      Cdc.mergeChangelogFull(base, log).drop("last_seq")
+        .orderBy(col("key")).collect().map(_.toSeq).toSeq)
   }
 
   test("streaming MoR arm: folds equal sequential MERGEs; DV forget arm materializes in-loop") {

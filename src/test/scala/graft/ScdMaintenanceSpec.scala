@@ -444,6 +444,22 @@ class ScdMaintenanceSpec extends SparkSpec {
       e.getMessage.contains("no epoch files"), s"got: ${e.getMessage}")
   }
 
+  test("an out-of-band-deleted marker directory is refused loud, naming it") {
+    val dir = tmp("nofold")
+    val m = ScdMaintainer.build(log.limit(0), dir)
+    def rmAll(p: java.io.File): Unit = {
+      Option(p.listFiles()).foreach(_.foreach(rmAll)); p.delete(); ()
+    }
+    rmAll(new java.io.File(s"$dir/fold"))
+    val batch = Seq((1L, 10L, "U", "a", 1.0)).toDF("key", "seq", "op", "name", "val")
+    Seq[() => Any](() => m.foldedBatches, () => m.current, () => m.fold(batch, Some(0L)))
+      .foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(s"$dir/fold") &&
+          e.getMessage.contains("no pair marker"), s"got: ${e.getMessage}")
+      }
+  }
+
   test("in-loop marker retention clamps to current+previous, shielding in-flight readers") {
     val dir = tmp("clamp")
     val m = ScdMaintainer.build(log, dir)
