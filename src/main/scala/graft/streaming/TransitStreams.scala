@@ -12,11 +12,18 @@ import graft.schemas.Transit._
   *
   * State-at-scale notes: every stateful op below keys its state exactly by
   * its grouping columns, so the state store partitions on the shuffle key and
-  * scales linearly with executors. The reference keeps all state in one
-  * process (consumers/server.py) — here each key group lives on one
-  * partition, nothing global. Watermarking is optional (the reference is
-  * processing-time only, SURVEY §2.5 O4); pass `watermark=Some("10 minutes")`
-  * to bound state for event-time replays.
+  * each key group lives on one partition, nothing global (the reference keeps
+  * all state in one process, consumers/server.py). The partition count is
+  * fixed when a checkpoint is created: Spark records
+  * `spark.sql.shuffle.partitions` in the offset log and every restart
+  * resumes with that count, so more executors add parallelism only up to
+  * it, and changing it needs a new checkpoint. The transit key spaces are
+  * bounded by the station network, not by the event rate (one key per
+  * platform, per station, and one weather key), which is why
+  * [[TransitPipeline.start]] creates its checkpoints at one state partition.
+  * Watermarking is optional (the reference is processing-time only,
+  * SURVEY §2.5 O4); pass `watermark=Some("10 minutes")` to bound state for
+  * event-time replays.
   */
 object TransitStreams {
 
@@ -206,6 +213,7 @@ object TransitStreams {
   }
 
   // O4 — micro-poll loop analog (consumers/consumer.py:70-99 polls every
-  // 1 s): the processing-time trigger that wires the above to sinks is
-  // `TransitPipeline.Config.triggerMs`.
+  // 1 s): `TransitPipeline.start` runs each query on Spark's default
+  // trigger, the next micro-batch as soon as the previous one ends, and an
+  // idle query re-polls its source every 100 ms.
 }
